@@ -19,16 +19,19 @@ so the analyzer queries run on it unchanged.
 from __future__ import annotations
 
 import time
-
-from pyspark.storagelevel import StorageLevel
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import partial
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from picoprobedataflow_spark.io import binary_files as BF
 from picoprobedataflow_spark.io import emd as EMD
 from picoprobedataflow_spark.operators import scientific as SC
+from picoprobedataflow_spark.session import prep
 
 
 @dataclass
@@ -51,42 +54,73 @@ class FlowResult:
             "state_name string, time double")
 
 
-class _StepLog:
-    def __init__(self, run_id: str):
-        self.run_id = run_id
-        self.rows: list[tuple[str, int, str, str, float]] = []
-        self._i = 0
-
-    def __call__(self, state_name: str):
-        log = self
-
-        class _Ctx:
-            def __enter__(self_inner):
-                log.rows.append((log.run_id, log._i, "ActionStarted",
-                                 state_name, time.time()))
-                log._i += 1
-                return self_inner
-
-            def __exit__(self_inner, *exc):
-                log.rows.append((log.run_id, log._i, "ActionCompleted",
-                                 state_name, time.time()))
-                log._i += 1
-                return False
-
-        return _Ctx()
+@contextmanager
+def _step(rows: list, run_id: str, state_name: str):
+    """Bracket one flow step with ActionStarted/ActionCompleted rows."""
+    rows.append((run_id, len(rows), "ActionStarted", state_name,
+                 time.time()))
+    try:
+        yield
+    finally:
+        rows.append((run_id, len(rows), "ActionCompleted", state_name,
+                     time.time()))
 
 
-def _ingest(spark: SparkSession, input_dir: str, glob: str,
-            processed: DataFrame | None, log: _StepLog) -> DataFrame:
-    from picoprobedataflow_spark.plans.common import prep
+def _run_flow(spark: SparkSession, input_dir: str, catalog_path: str | None,
+              processed: DataFrame | None, run_id: str, tool: str,
+              analyze: Callable[[DataFrame], dict[str, DataFrame]],
+              exp_type: str) -> FlowResult:
+    """Transfer → ``tool`` (``analyze`` over the new files) → Publishv2.
 
+    Every frame the result hands out is an eager local checkpoint: a
+    snapshot of this call's directory scan. A persisted frame would
+    instead stay in the session's cache manager, which would serve it
+    to a later flow whose plan matches — a second flow over the same
+    directory would see this call's files, not the directory's."""
     prep(spark)  # AQE/UTC; avoids the default-200-partition shuffles
-    with log("Transfer"):
-        files = BF.scan_binary_dir(spark, input_dir, glob=glob)
-        manifest = BF.incremental_ingest(files, processed)
-        manifest = manifest.persist(StorageLevel.MEMORY_ONLY)
-        manifest.count()  # materialize inside the step boundary
-    return manifest
+    rows: list[tuple[str, int, str, str, float]] = []
+    step = partial(_step, rows, run_id)
+    with step("Transfer"):
+        manifest = BF.incremental_ingest(
+            BF.scan_binary_dir(spark, input_dir, glob="*.emd"),
+            processed).localCheckpoint(eager=True)
+    files = BF.scan_binary_dir(spark, input_dir, glob="*.emd").join(
+        manifest.select("path"), "path", "left_semi")
+
+    with step(tool):
+        analysis = analyze(files)
+
+    with step("Publishv2GatherMetadata"):
+        docs = (BF.publish_documents(files, exp_type=exp_type)
+                .localCheckpoint(eager=True))
+
+    with step("Publishv2Ingest"):
+        if catalog_path is not None:
+            BF.write_catalog(docs, catalog_path)
+
+    return FlowResult(run_id=run_id, manifest=manifest, publish_docs=docs,
+                      analysis=analysis, step_events=rows)
+
+
+def _hyperspectral_tool(files: DataFrame) -> dict[str, DataFrame]:
+    # The long-form cube feeds two reductions: cache it for their two
+    # checkpoints only.
+    cube = EMD.extract_cube_longform(files).persist(StorageLevel.MEMORY_ONLY)
+    try:
+        return {"image": SC.spectral_image(cube).localCheckpoint(eager=True),
+                "spectrum": SC.spectrum(cube).localCheckpoint(eager=True),
+                "signals": EMD.extract_signals(files)}
+    finally:
+        cube.unpersist()
+
+
+def _temporal_tool(files: DataFrame) -> dict[str, DataFrame]:
+    # (T, X, Y) stack: channel ≙ frame index t (time-major layout)
+    frames = EMD.extract_cube_longform(files).select(
+        "path", F.col("x").alias("t"), F.col("y").alias("x"),
+        F.col("channel").alias("y"), F.col("counts").alias("intensity"))
+    return {"frames_px": SC.normalize_frames(frames, keys=("path", "t"))
+            .localCheckpoint(eager=True)}
 
 
 def hyperspectral_flow(spark: SparkSession, input_dir: str,
@@ -95,31 +129,9 @@ def hyperspectral_flow(spark: SparkSession, input_dir: str,
                        run_id: str = "hyper-run-0") -> FlowResult:
     """PicoProbeMetadataFlow twin: ingest .emd files, extract the 3-D
     signal, reduce to image + spectrum, publish."""
-    log = _StepLog(run_id)
-    manifest = _ingest(spark, input_dir, "*.emd", processed, log)
-    files = BF.scan_binary_dir(spark, input_dir, glob="*.emd").join(
-        manifest.select("path"), "path", "left_semi")
-
-    with log("HyperspectralImageTool"):
-        cube = EMD.extract_cube_longform(files).persist(StorageLevel.MEMORY_ONLY)
-        image = SC.spectral_image(cube)
-        spect = SC.spectrum(cube)
-        image.count(), spect.count()
-
-    with log("Publishv2GatherMetadata"):
-        signals = EMD.extract_signals(files)
-        docs = BF.publish_documents(files, exp_type="hyperspectral_imaging")
-        docs = docs.persist(StorageLevel.MEMORY_ONLY)
-        docs.count()
-
-    with log("Publishv2Ingest"):
-        if catalog_path is not None:
-            BF.write_catalog(docs, catalog_path)
-
-    return FlowResult(run_id=run_id, manifest=manifest, publish_docs=docs,
-                      analysis={"image": image, "spectrum": spect,
-                                "signals": signals},
-                      step_events=log.rows)
+    return _run_flow(spark, input_dir, catalog_path, processed, run_id,
+                     "HyperspectralImageTool", _hyperspectral_tool,
+                     "hyperspectral_imaging")
 
 
 def spatiotemporal_flow(spark: SparkSession, input_dir: str,
@@ -129,29 +141,6 @@ def spatiotemporal_flow(spark: SparkSession, input_dir: str,
     """PicoProbeTemporalImaging twin: ingest, per-frame normalize (the
     MP4-encode precursor, temporal.py:21-35), publish. The YOLO stage
     is the batched-inference stub in operators.multimodal."""
-    log = _StepLog(run_id)
-    manifest = _ingest(spark, input_dir, "*.emd", processed, log)
-    files = BF.scan_binary_dir(spark, input_dir, glob="*.emd").join(
-        manifest.select("path"), "path", "left_semi")
-
-    with log("TemporalImageTool"):
-        cube = EMD.extract_cube_longform(files)
-        # (T, X, Y) stack: channel ≙ frame index t (time-major layout)
-        frames = cube.select("path", F.col("x").alias("t"),
-                             F.col("y").alias("x"),
-                             F.col("channel").alias("y"),
-                             F.col("counts").alias("intensity"))
-        px = SC.normalize_frames(frames, keys=("path", "t")).persist(StorageLevel.MEMORY_ONLY)
-        px.count()
-
-    with log("Publishv2GatherMetadata"):
-        docs = BF.publish_documents(files, exp_type="spatiotemporal_imaging")
-        docs = docs.persist(StorageLevel.MEMORY_ONLY)
-        docs.count()
-
-    with log("Publishv2Ingest"):
-        if catalog_path is not None:
-            BF.write_catalog(docs, catalog_path)
-
-    return FlowResult(run_id=run_id, manifest=manifest, publish_docs=docs,
-                      analysis={"frames_px": px}, step_events=log.rows)
+    return _run_flow(spark, input_dir, catalog_path, processed, run_id,
+                     "TemporalImageTool", _temporal_tool,
+                     "spatiotemporal_imaging")

@@ -101,14 +101,6 @@ def shingles(text: Column | str, k: int = 3) -> Column:
     ).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
-def char_ngrams(text: Column | str, k: int = 4) -> Column:
-    """Character k-grams (language-ID features)."""
-    c = F.col(text) if isinstance(text, str) else text
-    n = F.length(c)
-    idx = F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1)))
-    return F.transform(idx, lambda i: F.substr(c, i, F.lit(k)))
-
-
 def fingerprint_md5(text: Column | str) -> Column:
     """Whole-document fingerprint (exact-dedup key)."""
     c = F.col(text) if isinstance(text, str) else text

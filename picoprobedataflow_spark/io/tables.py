@@ -123,8 +123,6 @@ def _scan_fill_repartition(spark: SparkSession, df: DataFrame,
     key = _COMPUTE_DENSE.get(name)
     if key is None:
         return df
-    if os.environ.get("SPARK_GRAFT_SCAN_REPART", "1") == "0":
-        return df
     try:
         size = int(df._jdf.queryExecution().optimizedPlan()
                    .stats().sizeInBytes())
@@ -161,10 +159,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
 def load_tables(spark: SparkSession, sf_dir: str,
                 names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TABLE_NAMES) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -1,7 +1,8 @@
 """Shared helpers for catalog queries.
 
-Every query fn calls :func:`prep` on the session it was handed (the
-driver owns the session) so runtime SQL confs critical for oracle
+Every query fn calls :func:`prep` (defined next to the one conf table
+in :mod:`picoprobedataflow_spark.session`) on the session it was handed
+(the driver owns the session) so runtime SQL confs critical for oracle
 parity are in force:
 
 - ``session.timeZone=UTC`` — DuckDB timestamps are UTC-naive.
@@ -21,29 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from picoprobedataflow_spark.io.tables import load_table
-
-_RUNTIME_CONFS = {
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    # Right-sized for local[32] test/bench runs; on a real cluster AQE
-    # coalescing makes the initial number non-critical.
-    "spark.sql.shuffle.partitions": "32",
-    # AQE may coalesce cached-plan output partitioning (see
-    # session.py: 26% off the persist-heavy iterative keys; scale-safe
-    # because AQE targets advisory-sized partitions).
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
-    # Shuffled-hash join allowed where the build side fits (see
-    # session.py; guide §3.1 — measured 5-20% off the SMJ keys).
-    "spark.sql.join.preferSortMergeJoin": "false",
-}
-
-
-def prep(spark: SparkSession) -> SparkSession:
-    for k, v in _RUNTIME_CONFS.items():
-        spark.conf.set(k, v)
-    return spark
+from picoprobedataflow_spark.session import prep
 
 
 def tbl(spark: SparkSession, sf_dir: str, name: str,

@@ -29,6 +29,7 @@ from picoprobedataflow_spark.operators import packing as PK
 from picoprobedataflow_spark.operators import similarity as SIM
 from picoprobedataflow_spark.plans.catalog import query
 from picoprobedataflow_spark.plans.common import tbl
+from picoprobedataflow_spark.session import session_memo
 
 # ---- shared oracle CTE fragments -----------------------------------------
 
@@ -1962,17 +1963,16 @@ def semdedup_embedding_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PQ_M, _PQ_CODES, _PQ_ITER, _PQ_TOPK = 4, 8, 2, 10
 
-#: One quantizer build per (session, sf_dir): the three quantized ANN
-#: entries (pq_adc / ivfpq / ivfpq_residual) train overlapping
-#: codebooks — identical raw-vector subspace books for pq_adc and
-#: ivfpq (same md5 seeds, same per-(subspace, cell, dim) mean
-#: multisets, see ivfpq_search's docstring) and an identical coarse
-#: quantizer for ivfpq and the residual path. At 100 TB an index is
-#: built once and served to every query; rebuilding it per search
-#: call is a benchmark artifact, so the suite amortizes ONE build
-#: across all three searches (round-6 ask; ≡ per-search builds,
-#: pytest-pinned in tests/test_operators.py).
-_QUANT_BUILD_CACHE: dict[tuple, tuple] = {}
+# One quantizer build per (session, sf_dir), held in the session
+# memo: the three quantized ANN entries (pq_adc / ivfpq /
+# ivfpq_residual) train overlapping codebooks — identical raw-vector
+# subspace books for pq_adc and ivfpq (same md5 seeds, same
+# per-(subspace, cell, dim) mean multisets, see ivfpq_search's
+# docstring) and an identical coarse quantizer for ivfpq and the
+# residual path. At 100 TB an index is built once and served to every
+# query; rebuilding it per search call is a benchmark artifact, so the
+# suite amortizes ONE build across all three searches (round-6 ask;
+# ≡ per-search builds, pytest-pinned in tests/test_operators.py).
 
 
 def _quant_shared_build(spark: SparkSession, sf_dir: str) -> tuple:
@@ -1987,16 +1987,12 @@ def _quant_shared_build(spark: SparkSession, sf_dir: str) -> tuple:
     k·dim-bounded (codebooks); the big objects are DataFrames over
     localCheckpointed RDDs that survive ``spark.catalog.clearCache``.
     """
-    key = (spark.sparkContext.applicationId, sf_dir,
-           _PQ_M, _PQ_CODES, _PQ_ITER, _KM_K, _KM_ITER)
-    hit = _QUANT_BUILD_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # Eviction: entries from other (stopped/restarted) sessions pin
-    # localCheckpointed blocks that are unreachable once their app is
-    # gone — keep only the current applicationId's entries.
-    for stale in [k2 for k2 in _QUANT_BUILD_CACHE if k2[0] != key[0]]:
-        del _QUANT_BUILD_CACHE[stale]
+    return session_memo(spark, "quant_build", sf_dir,
+                        lambda: _build_quantizers(spark, sf_dir),
+                        _PQ_M, _PQ_CODES, _PQ_ITER, _KM_K, _KM_ITER)
+
+
+def _build_quantizers(spark: SparkSession, sf_dir: str) -> tuple:
     emb = tbl(spark, sf_dir, "embeddings", scan_repart=True)
     qvec = [float(x) for x in
             emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]]
@@ -2014,9 +2010,7 @@ def _quant_shared_build(spark: SparkSession, sf_dir: str) -> tuple:
                  .localCheckpoint(eager=True))
     _, res_books = SIM.pq_encode(None, _PQ_M, _PQ_CODES, _PQ_ITER,
                                  vecs=residuals)
-    out = (qvec, vecs, codes, raw_books, coarse_rows, res_books)
-    _QUANT_BUILD_CACHE[key] = out
-    return out
+    return (qvec, vecs, codes, raw_books, coarse_rows, res_books)
 
 
 # --------------------------------------------------------------------------
@@ -2028,8 +2022,6 @@ def _quant_shared_build(spark: SparkSession, sf_dir: str) -> tuple:
 # per (session, sf_dir), then every query plans against the persisted
 # tables — the quantized-ANN shared-build pattern, applied to text.
 # --------------------------------------------------------------------------
-
-_SERVED_DEDUP_CACHE: dict[tuple, tuple] = {}
 
 
 def _served_dedup_tables(spark: SparkSession, sf_dir: str) -> tuple:
@@ -2046,22 +2038,20 @@ def _served_dedup_tables(spark: SparkSession, sf_dir: str) -> tuple:
       join on longs).
 
     Both land under the system temp dir keyed by applicationId, so
-    restarted sessions rebuild instead of trusting stale files; same
-    eviction policy as the quantized build cache."""
+    restarted sessions rebuild instead of trusting stale files."""
+    return session_memo(spark, "served_dedup", sf_dir,
+                        lambda: _write_served_dedup(spark, sf_dir))
+
+
+def _write_served_dedup(spark: SparkSession, sf_dir: str) -> tuple:
     import os
     import tempfile
 
     from picoprobedataflow_spark.functions import scalar as SC
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SERVED_DEDUP_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for stale in [k2 for k2 in _SERVED_DEDUP_CACHE
-                  if k2[0] != key[0]]:
-        del _SERVED_DEDUP_CACHE[stale]
     base = os.path.join(
-        tempfile.gettempdir(), "spark_graft_served", key[0],
+        tempfile.gettempdir(), "spark_graft_served",
+        spark.sparkContext.applicationId,
         sf_dir.strip("/").replace("/", "_"))
     docs = tbl(spark, sf_dir, "documents", scan_repart=True)
     sig_path = os.path.join(base, "simhash_sigs")
@@ -2077,9 +2067,7 @@ def _served_dedup_tables(spark: SparkSession, sf_dir: str) -> tuple:
     (sh.join(F.broadcast(drop), "shingle", "left_anti")
        .select("doc_id", "shingle")
        .write.mode("overwrite").parquet(sh_path))
-    out = (spark.read.parquet(sig_path), spark.read.parquet(sh_path))
-    _SERVED_DEDUP_CACHE[key] = out
-    return out
+    return spark.read.parquet(sig_path), spark.read.parquet(sh_path)
 
 
 def simhash_served_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2116,13 +2104,6 @@ def containment_served_pairs(spark: SparkSession,
     return DD.containment_pairs(None, k=3, threshold=0.9, shingles=sh)
 
 
-#: One SemDeDup centroid build per (applicationId, sf_dir): the
-#: k·dim-bounded [(cell, centroid)] list — the index a deployment
-#: trains once and serves to every prune pass. Driver-side cache,
-#: same keying/eviction story as _QUANT_BUILD_CACHE.
-_SEMDEDUP_CENT_CACHE: dict = {}
-
-
 def semdedup_served_prune(spark: SparkSession,
                           sf_dir: str) -> DataFrame:
     """SemDeDup prune verdicts from CACHED centroids: the Lloyd's
@@ -2133,52 +2114,17 @@ def semdedup_served_prune(spark: SparkSession,
     steady-state cost of re-pruning a corpus against a standing
     semantic index. Same auto-k rule, same threshold; verdicts are
     identical to the cold path by construction (the cached rows ARE
-    the cold build's rows), equality pytest-pinned."""
+    the cold build's rows), equality pytest-pinned. The memo holds the
+    k·dim-bounded [(cell, centroid)] list — the index a deployment
+    trains once and serves to every prune pass."""
     emb = tbl(spark, sf_dir, "embeddings").filter(F.col("vec_id") > 0)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cent_rows = _SEMDEDUP_CENT_CACHE.get(key)
-    if cent_rows is None:
-        for stale in [k2 for k2 in _SEMDEDUP_CENT_CACHE
-                      if k2[0] != key[0]]:
-            del _SEMDEDUP_CENT_CACHE[stale]
-        # The ONE shared cold build (round-13 review find: this
-        # branch had copied semantic_dedup's build lines).
-        cent_rows = SIM.semdedup_centroid_rows(emb, n_iter=_KM_ITER)
-        _SEMDEDUP_CENT_CACHE[key] = cent_rows
+    # The ONE shared cold build (round-13 review find: this branch had
+    # copied semantic_dedup's build lines).
+    cent_rows = session_memo(
+        spark, "semdedup_centroids", sf_dir,
+        lambda: SIM.semdedup_centroid_rows(emb, n_iter=_KM_ITER))
     return SIM.semantic_dedup(emb, threshold=_SEMDEDUP_THR,
                               cent_rows=cent_rows)
-
-
-def _pq_oracle(m: int, k: int, n_iter: int, topk: int,
-               dim: int = 64) -> str:
-    sub = dim // m
-    ctes: list[str] = []
-    for i in range(m):
-        ctes += _kmeans_build_ctes(k, n_iter, dim=sub, suffix=f"_s{i}",
-                                   slice_lo=i * sub + 1)
-        ctes.append(
-            f"q_s{i} AS (SELECT CAST(embedding AS DOUBLE[])"
-            f"[{i * sub + 1}:{(i + 1) * sub}] AS qv\n"
-            "     FROM embeddings WHERE vec_id = 0)")
-        qdist = " + ".join(
-            f"(q.qv[{j}] - c.c[{j}]) * (q.qv[{j}] - c.c[{j}])"
-            for j in range(1, sub + 1))
-        ctes.append(f"""lut_s{i} AS (
-  SELECT c.cell, {qdist} AS d
-  FROM cents{n_iter}_s{i} c CROSS JOIN q_s{i} q)""")
-    joins = "\n".join(
-        [f"JOIN assignf_s{i} a{i} USING (vec_id)" for i in range(1, m)]
-        + [f"JOIN lut_s{i} l{i} ON l{i}.cell = a{i}.cell"
-           for i in range(m)])
-    cols = ", ".join(f"a{i}.cell AS c{i}" for i in range(m))
-    dsum = " + ".join(f"l{i}.d" for i in range(m))
-    return "WITH " + ",\n".join(ctes) + f"""
-SELECT a0.vec_id, {cols}, round({dsum}, 6) AS adc
-FROM assignf_s0 a0
-{joins}
-ORDER BY round({dsum}, 6), a0.vec_id
-LIMIT {topk}
-"""
 
 
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4066,9 +4012,6 @@ def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("dst")))
 
 
-_PR_WARM_CACHE: dict = {}
-
-
 def pagerank_warm_scores(spark: SparkSession,
                          sf_dir: str) -> DataFrame:
     """Bench variant (round 14): the EPOCH-2 cost of the frontier
@@ -4082,17 +4025,12 @@ def pagerank_warm_scores(spark: SparkSession,
     from picoprobedataflow_spark.operators.graph import pagerank
 
     edges = _pr_edges(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    init = _PR_WARM_CACHE.get(key)
-    if init is None:
-        for stale in [k2 for k2 in _PR_WARM_CACHE
-                      if k2[0] != key[0]]:
-            del _PR_WARM_CACHE[stale]
-        init = (pagerank(edges, n_iter=10, damping=_PR_DAMP,
-                         round_digits=None)
-                .select("node", "pr")
-                .localCheckpoint(eager=True))
-        _PR_WARM_CACHE[key] = init
+    init = session_memo(
+        spark, "pagerank_warm", sf_dir,
+        lambda: (pagerank(edges, n_iter=10, damping=_PR_DAMP,
+                          round_digits=None)
+                 .select("node", "pr")
+                 .localCheckpoint(eager=True)))
     return pagerank(edges, n_iter=2, damping=_PR_DAMP,
                     init_ranks=init)
 
@@ -5021,45 +4959,6 @@ def epoch_shuffle_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVFPQ_PROBE, _IVFPQ_TOPK = 2, 10
 
 
-def _ivfpq_oracle(n_cells: int, n_probe: int, m: int, k: int,
-                  n_iter: int, topk: int, dim: int = 64) -> str:
-    sub = dim // m
-    ctes = _kmeans_build_ctes(n_cells, n_iter, dim)          # coarse
-    ctes.append("q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv\n"
-                "     FROM embeddings WHERE vec_id = 0)")
-    ctes.append(f"""probe AS (
-  SELECT cell FROM cents{n_iter}
-  ORDER BY list_cosine_similarity(c, (SELECT qv FROM q)) DESC, cell
-  LIMIT {n_probe})""")
-    for i in range(m):
-        ctes += _kmeans_build_ctes(k, n_iter, dim=sub, suffix=f"_s{i}",
-                                   slice_lo=i * sub + 1)
-        ctes.append(
-            f"q_s{i} AS (SELECT CAST(embedding AS DOUBLE[])"
-            f"[{i * sub + 1}:{(i + 1) * sub}] AS qv\n"
-            "     FROM embeddings WHERE vec_id = 0)")
-        qdist = " + ".join(
-            f"(q.qv[{j}] - c.c[{j}]) * (q.qv[{j}] - c.c[{j}])"
-            for j in range(1, sub + 1))
-        ctes.append(f"""lut_s{i} AS (
-  SELECT c.cell, {qdist} AS d
-  FROM cents{n_iter}_s{i} c CROSS JOIN q_s{i} q)""")
-    joins = "\n".join(
-        [f"JOIN assignf_s{i} a{i} USING (vec_id)" for i in range(m)]
-        + [f"JOIN lut_s{i} l{i} ON l{i}.cell = a{i}.cell"
-           for i in range(m)])
-    cols = ", ".join(f"a{i}.cell AS c{i}" for i in range(m))
-    dsum = " + ".join(f"l{i}.d" for i in range(m))
-    return "WITH " + ",\n".join(ctes) + f"""
-SELECT a.vec_id, a.cell, {cols}, round({dsum}, 6) AS adc
-FROM assignf a
-{joins}
-WHERE a.cell IN (SELECT cell FROM probe)
-ORDER BY round({dsum}, 6), a.vec_id
-LIMIT {topk}
-"""
-
-
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ top-10 for the reserved query vector: the full-space
     8-cell coarse quantizer restricts the scan to the 2 cells nearest
@@ -5453,53 +5352,6 @@ def batch_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # becomes per-probed-cell. The oracle chains the coarse build, a
 # residual CTE, and four subspace builds OVER the residual stream.
 # --------------------------------------------------------------------------
-
-
-def _ivfpq_residual_oracle(n_cells: int, n_probe: int, m: int, k: int,
-                           n_iter: int, topk: int,
-                           dim: int = 64) -> str:
-    sub = dim // m
-    ctes = _kmeans_build_ctes(n_cells, n_iter, dim)          # coarse
-    ctes.append("q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv\n"
-                "     FROM embeddings WHERE vec_id = 0)")
-    ctes.append(f"""probe AS (
-  SELECT cell FROM cents{n_iter}
-  ORDER BY list_cosine_similarity(c, (SELECT qv FROM q)) DESC, cell
-  LIMIT {n_probe})""")
-    ctes.append(f"""rve AS MATERIALIZED (
-  SELECT e.vec_id,
-         list_transform(range(1, {dim + 1}), i -> e.v[i] - c.c[i]) AS v
-  FROM ve e
-  JOIN assignf a USING (vec_id)
-  JOIN cents{n_iter} c ON a.cell = c.cell)""")
-    for i in range(m):
-        o = i * sub
-        ctes += _kmeans_build_ctes(k, n_iter, dim=sub, suffix=f"_r{i}",
-                                   slice_lo=o + 1, source="rve")
-        qdist = " + ".join(
-            f"((q.qv[{o + j}] - cc.c[{o + j}]) - c.c[{j}])"
-            f" * ((q.qv[{o + j}] - cc.c[{o + j}]) - c.c[{j}])"
-            for j in range(1, sub + 1))
-        ctes.append(f"""lut_r{i} AS (
-  SELECT p.cell, c.cell AS code, {qdist} AS d
-  FROM probe p
-  JOIN cents{n_iter} cc ON cc.cell = p.cell
-  CROSS JOIN cents{n_iter}_r{i} c
-  CROSS JOIN q)""")
-    joins = "\n".join(
-        [f"JOIN assignf_r{i} a{i} USING (vec_id)" for i in range(m)]
-        + [f"JOIN lut_r{i} l{i} ON l{i}.cell = a.cell"
-           f" AND l{i}.code = a{i}.cell" for i in range(m)])
-    cols = ", ".join(f"a{i}.cell AS c{i}" for i in range(m))
-    dsum = " + ".join(f"l{i}.d" for i in range(m))
-    return "WITH " + ",\n".join(ctes) + f"""
-SELECT a.vec_id, a.cell, {cols}, round({dsum}, 6) AS adc
-FROM assignf a
-{joins}
-WHERE a.cell IN (SELECT cell FROM probe)
-ORDER BY round({dsum}, 6), a.vec_id
-LIMIT {topk}
-"""
 
 
 def ann_ivfpq_residual_topk(spark: SparkSession,
@@ -6962,10 +6814,6 @@ def _suite_oracle(idx: int) -> str:
 _LLM_SUITE_ORACLE = _suite_oracle(1)
 _LLM_SUITE2_ORACLE = _suite_oracle(2)
 _LLM_SUITE3_ORACLE = _suite_oracle(3)
-
-
-def _nulls_long():
-    return F.lit(None).cast("long")
 
 
 def _fam_df(df, family: str, k1=None, n=(), v=(), b1=None):

@@ -1,7 +1,11 @@
-"""SparkSession factory.
+"""SparkSession factory and the session-scoped state of the engine.
 
 Single place where execution knobs live so every entry point (tests,
-bench, driver contract) gets the same tuned session.
+bench, driver contract) gets the same tuned session: :func:`get_spark`
+builds a session from :data:`_BASE_CONFS`, and :func:`prep` re-applies
+its runtime (``spark.sql.*``) entries to a session someone else built.
+:func:`session_memo` holds the write-once builds that live as long as
+one Spark application.
 
 Scale posture: these configs are written for a real cluster; on
 ``local[N]`` they degrade gracefully. AQE handles runtime partition
@@ -15,12 +19,17 @@ safe).
 from __future__ import annotations
 
 import os
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
 # Timezone is pinned to UTC so timestamp arithmetic matches the ANSI-SQL
 # oracle (DuckDB) byte-for-byte; the reference strips timezones before
 # epoch math the same way (flow_analyzer.py:199-204).
+#
+# The one conf table. Its ``spark.sql.*`` entries are runtime-settable
+# and :func:`prep` applies them on every query build, so a value written
+# here (e.g. by an A/B arm) is the value in force.
 _BASE_CONFS: dict[str, str] = {
     # local[N] = single JVM: driver memory IS executor memory. The 1g
     # Spark default OOMs ~50k-doc dedup joins; but oversizing hurts too
@@ -29,6 +38,12 @@ _BASE_CONFS: dict[str, str] = {
     # best GC behavior; override via SPARK_GRAFT_DRIVER_MEM.
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.sql.session.timeZone": "UTC",
+    # Compatibility with the legacy TIMESTAMP(NANOS) layout of the
+    # ``events`` table, which Spark's vectorized reader otherwise
+    # rejects (see plans/common.ts_to_us).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Right-sized for local[32] test/bench runs; on a real cluster AQE
+    # coalescing makes the initial number non-critical.
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -85,17 +100,36 @@ def get_spark(app_name: str = "picoprobedataflow_spark",
     return spark
 
 
-def tune_existing(spark: SparkSession) -> SparkSession:
-    """Apply the runtime-settable confs to a session we didn't build.
+def prep(spark: SparkSession) -> SparkSession:
+    """Apply the runtime (``spark.sql.*``) confs of :data:`_BASE_CONFS`.
 
     The driver passes its own SparkSession to ``entry()``/``queries()``;
-    static confs (memory, master) are already fixed, but SQL confs can
-    still be aligned so query semantics (timezone!) match the oracle.
-    """
+    static confs (memory, master) are already fixed, but SQL confs are
+    aligned on every query build so query semantics (timezone!) match
+    the oracle."""
     for k, v in _BASE_CONFS.items():
         if k.startswith("spark.sql."):
-            try:
-                spark.conf.set(k, v)
-            except Exception:
-                pass  # non-runtime conf on this build — keep going
+            spark.conf.set(k, v)
     return spark
+
+
+#: Write-once builds shared by the queries of one Spark application:
+#: key ``(name, applicationId, sf_dir, *params)`` -> built value.
+_SESSION_MEMO: dict[tuple, Any] = {}
+
+
+def session_memo(spark: SparkSession, name: str, sf_dir: str,
+                 build: Callable[[], Any], *params: Any) -> Any:
+    """``build()`` once per (name, application, sf_dir, params); later
+    calls in the same application get the same object back.
+
+    Entries of other (stopped) applications are evicted on the next
+    build: they pin localCheckpointed blocks and temp files that are
+    unreachable once their app is gone."""
+    app = spark.sparkContext.applicationId
+    key = (name, app, sf_dir, *params)
+    if key not in _SESSION_MEMO:
+        for stale in [k for k in _SESSION_MEMO if k[1] != app]:
+            del _SESSION_MEMO[stale]
+        _SESSION_MEMO[key] = build()
+    return _SESSION_MEMO[key]

@@ -3,7 +3,10 @@
 Ambient load in this sandbox swings minute to minute, so sequential
 A-then-B captures are worthless; this interleaves A and B per pass
 (shuffled key order, clearCache between queries) and reports per-key
-min and median for both arms from the same time window.
+min and median for both arms from the same time window. Each arm's
+value goes into the session AND the one conf table
+(``session._BASE_CONFS``), so the ``prep()`` that every query build
+calls keeps the arm's value instead of resetting it.
 
 Usage:
   AB_CONF='{"spark.x":["a_val","b_val"], ...}' \
@@ -24,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import bench as B  # noqa: E402
 from capture_plans import all_bench_fns, build_variant_registry  # noqa: E402
-from picoprobedataflow_spark.session import get_spark  # noqa: E402
+from picoprobedataflow_spark import session as S  # noqa: E402
 
 
 def main() -> None:
@@ -35,7 +38,7 @@ def main() -> None:
             passes = int(a.split("=", 1)[1])
     ab = json.loads(os.environ["AB_CONF"])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="ab-conf")
+    spark = S.get_spark(app_name="ab-conf")
     fns, _ = all_bench_fns(spark)
     fns.update(build_variant_registry())
     from picoprobedataflow_spark.plans.common import tbl
@@ -51,6 +54,7 @@ def main() -> None:
 
     def set_arm(i: int) -> None:
         for k, vals in ab.items():
+            S._BASE_CONFS[k] = vals[i]
             spark.conf.set(k, vals[i])
 
     reps: dict[tuple, list] = {(k, i): [] for k in keys for i in (0, 1)}

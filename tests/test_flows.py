@@ -19,6 +19,7 @@ from picoprobedataflow_spark.flows import (
     spatiotemporal_flow,
 )
 from picoprobedataflow_spark.io import emd
+from picoprobedataflow_spark.io.binary_files import search_catalog
 from picoprobedataflow_spark.io.records import (
     TRANSITIONS_SCHEMA,
     paginated_rest_scan,
@@ -27,13 +28,17 @@ from picoprobedataflow_spark.io.records import (
 )
 
 
+def _write_emd_files(directory, indices, seed=0):
+    rng = np.random.default_rng(seed)
+    for i in indices:
+        cube = rng.integers(0, 50, size=(6, 5, 4)).astype("f4")
+        (directory / f"simulator-{i}-run.emd").write_bytes(
+            emd.write_fake_emd([("EDS", cube, {"i": i})]))
+
+
 @pytest.fixture()
 def emd_drop(tmp_path):
-    rng = np.random.default_rng(0)
-    for i in range(3):
-        cube = rng.integers(0, 50, size=(6, 5, 4)).astype("f4")
-        (tmp_path / f"simulator-{i}-run.emd").write_bytes(
-            emd.write_fake_emd([("EDS", cube, {"i": i})]))
+    _write_emd_files(tmp_path, range(3))
     return tmp_path
 
 
@@ -52,9 +57,33 @@ def test_hyperspectral_flow_end_to_end(spark, emd_drop, tmp_path):
     steps = [r.state_name for r in ev.orderBy("entry_index").collect()]
     assert steps[0] == steps[1] == "Transfer"
     assert steps[2] == steps[3] == "HyperspectralImageTool"
-    # published catalog is queryable
-    docs = spark.read.parquet(cat)
+    # published catalog is queryable through the search API
+    docs = search_catalog(spark, cat)
     assert docs.count() == 1 and docs.collect()[0].n_files == 3
+    hit = search_catalog(spark, cat, text_like="simulator-1-run").collect()
+    assert len(hit) == 1 and hit[0].n_files == 3
+    assert search_catalog(spark, cat, text_like="no-such-file").count() == 0
+
+
+def test_repeated_flows_over_one_directory_see_new_files(spark, emd_drop):
+    """Flows leave no cached plan behind, so each flow over a directory
+    scans it afresh within one session: an incremental run after new
+    files land sees exactly those, and a later full run sees all."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # only to start from an empty cache
+    first = hyperspectral_flow(spark, str(emd_drop))
+    assert cache.isEmpty()
+    _write_emd_files(emd_drop, range(3, 5), seed=1)
+
+    inc = hyperspectral_flow(spark, str(emd_drop), processed=first.manifest)
+    assert cache.isEmpty()
+    assert inc.manifest.count() == 2
+    assert inc.analysis["image"].count() == 2 * 6 * 5
+
+    again = hyperspectral_flow(spark, str(emd_drop))
+    assert cache.isEmpty()
+    assert again.manifest.count() == 5
+    assert again.publish_docs.collect()[0].n_files == 5
 
 
 def test_spatiotemporal_flow_normalizes(spark, emd_drop):

@@ -1654,20 +1654,22 @@ def test_quant_shared_build_equals_self_build(spark):
     same objects without re-building."""
     from pyspark.sql import functions as F
 
+    from picoprobedataflow_spark import session as S
+
     sf = "/root/testdata/sf0.001"
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     corpus = emb.filter(F.col("vec_id") > 0)
     qvec = [float(x) for x in
             emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]]
 
-    PL._QUANT_BUILD_CACHE.clear()
+    S._SESSION_MEMO.clear()
     shared_pq = PL.ann_pq_adc_topk(spark, sf).collect()
     shared_ivfpq = PL.ann_ivfpq_topk(spark, sf).collect()
     shared_res = PL.ann_ivfpq_residual_topk(spark, sf).collect()
-    assert len(PL._QUANT_BUILD_CACHE) == 1
-    build = next(iter(PL._QUANT_BUILD_CACHE.values()))
+    assert len(S._SESSION_MEMO) == 1
+    build = next(iter(S._SESSION_MEMO.values()))
     assert PL.ann_pq_adc_topk(spark, sf).collect() == shared_pq
-    assert next(iter(PL._QUANT_BUILD_CACHE.values())) is build
+    assert next(iter(S._SESSION_MEMO.values())) is build
 
     self_pq = SIM.pq_adc_search(corpus, qvec, k=10, m=4, n_codes=8,
                                 n_iter=2).collect()

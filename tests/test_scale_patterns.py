@@ -587,21 +587,22 @@ def test_semdedup_served_equals_cold(spark):
     equal the cold build exactly (same auto-k, same seeds — the
     cached rows ARE a kmeans_centroids build's rows), and the second
     call must reuse the driver-side centroid cache."""
+    from picoprobedataflow_spark import session as S
     from picoprobedataflow_spark.plans import pipeline as PL
 
     sf = "/root/testdata/sf0.001"
     cold = sorted(map(tuple,
                       PL.semdedup_embedding_prune(spark, sf)
                       .collect()))
-    PL._SEMDEDUP_CENT_CACHE.clear()
+    S._SESSION_MEMO.clear()
     served = sorted(map(tuple,
                         PL.semdedup_served_prune(spark, sf)
                         .collect()))
     assert served == cold and len(served) > 0
-    key = (spark.sparkContext.applicationId, sf)
-    rows_before = PL._SEMDEDUP_CENT_CACHE[key]
+    key = ("semdedup_centroids", spark.sparkContext.applicationId, sf)
+    rows_before = S._SESSION_MEMO[key]
     PL.semdedup_served_prune(spark, sf)
-    assert PL._SEMDEDUP_CENT_CACHE[key] is rows_before
+    assert S._SESSION_MEMO[key] is rows_before
 
 
 def test_runtime_bloom_filter_injects_on_selective_dim_join(spark):
