@@ -9,11 +9,12 @@ examples/spatiotemporal_flow/main.py:29-34):
 
 Spark mapping: the Transfer step is the binaryFile scan + checksum
 manifest (the data is already where the executors are — Spark's
-locality replaces Globus Transfer); the AnalysisTool is the EMD
-extraction kernel + relational reductions; Publish is the DataCite doc
-assembly + catalog append. One driver call materializes the whole DAG;
-per-step timing lands in a telemetry table shaped like FIXTURES.md §2
-so the analyzer queries run on it unchanged.
+locality replaces Globus Transfer); the AnalysisTool is one EMD kernel
+that parses each file once and reduces it in numpy; Publish is the
+DataCite doc assembly from the Transfer manifest + catalog append. One
+driver call materializes the whole DAG; per-step timing lands in a
+telemetry table shaped like FIXTURES.md §2 so the analyzer queries run
+on it unchanged.
 """
 
 from __future__ import annotations
@@ -25,8 +26,6 @@ from functools import partial
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from picoprobedataflow_spark.io import binary_files as BF
 from picoprobedataflow_spark.io import emd as EMD
@@ -38,7 +37,12 @@ from picoprobedataflow_spark.session import prep
 class FlowResult:
     """Materialized outputs of one flow run + its step-event telemetry
     (step_events rows shaped like FIXTURES.md §2: run_id, code,
-    state_name, time)."""
+    state_name, time).
+
+    Each step takes one eager local checkpoint, and every frame here
+    is that checkpoint or a projection of it, so all of them are
+    snapshots of the files as the flow read them: rewriting a file
+    after the call changes none of them."""
 
     run_id: str
     manifest: DataFrame
@@ -72,11 +76,15 @@ def _run_flow(spark: SparkSession, input_dir: str, catalog_path: str | None,
               exp_type: str) -> FlowResult:
     """Transfer → ``tool`` (``analyze`` over the new files) → Publishv2.
 
-    Every frame the result hands out is an eager local checkpoint: a
-    snapshot of this call's directory scan. A persisted frame would
-    instead stay in the session's cache manager, which would serve it
-    to a later flow whose plan matches — a second flow over the same
-    directory would see this call's files, not the directory's."""
+    One eager local checkpoint per step (the Transfer manifest, the
+    tool's kernel output, the publish documents), and every frame the
+    result hands out is one of them or a projection of one: a snapshot
+    of this call's directory scan. Each file is hashed once (Transfer;
+    Publish reuses the manifest) and parsed once (the tool's kernel).
+    A persisted frame would instead stay in the session's cache
+    manager, which would serve it to a later flow whose plan matches —
+    a second flow over the same directory would see this call's files,
+    not the directory's."""
     prep(spark)  # AQE/UTC; avoids the default-200-partition shuffles
     rows: list[tuple[str, int, str, str, float]] = []
     step = partial(_step, rows, run_id)
@@ -91,7 +99,7 @@ def _run_flow(spark: SparkSession, input_dir: str, catalog_path: str | None,
         analysis = analyze(files)
 
     with step("Publishv2GatherMetadata"):
-        docs = (BF.publish_documents(files, exp_type=exp_type)
+        docs = (BF.manifest_documents(manifest, exp_type=exp_type)
                 .localCheckpoint(eager=True))
 
     with step("Publishv2Ingest"):
@@ -103,23 +111,16 @@ def _run_flow(spark: SparkSession, input_dir: str, catalog_path: str | None,
 
 
 def _hyperspectral_tool(files: DataFrame) -> dict[str, DataFrame]:
-    # The long-form cube feeds two reductions: cache it for their two
-    # checkpoints only.
-    cube = EMD.extract_cube_longform(files).persist(StorageLevel.MEMORY_ONLY)
-    try:
-        return {"image": SC.spectral_image(cube).localCheckpoint(eager=True),
-                "spectrum": SC.spectrum(cube).localCheckpoint(eager=True),
-                "signals": EMD.extract_signals(files)}
-    finally:
-        cube.unpersist()
+    # one row per file: image, spectrum and signal rows
+    reduced = EMD.reduce_cubes(files).localCheckpoint(eager=True)
+    return {"image": SC.image_from_sums(reduced),
+            "spectrum": SC.spectrum_from_sums(reduced),
+            "signals": EMD.reduced_signals(reduced)}
 
 
 def _temporal_tool(files: DataFrame) -> dict[str, DataFrame]:
-    # (T, X, Y) stack: channel ≙ frame index t (time-major layout)
-    frames = EMD.extract_cube_longform(files).select(
-        "path", F.col("x").alias("t"), F.col("y").alias("x"),
-        F.col("channel").alias("y"), F.col("counts").alias("intensity"))
-    return {"frames_px": SC.normalize_frames(frames, keys=("path", "t"))
+    # (T, X, Y) stacks, each frame normalized in the kernel
+    return {"frames_px": EMD.normalize_stacks(files)
             .localCheckpoint(eager=True)}
 
 

@@ -66,9 +66,10 @@ def file_extension(path: Column | str) -> Column:
 
 def normalize_to_uint8(x: Column, lo: Column, hi: Column) -> Column:
     """F10 — per-frame min/max normalize to 0..255 with the reference's
-    0.499999999 rounding nudge (tools/temporal.py:30-34)."""
+    0.499999999 rounding nudge (tools/temporal.py:30-34). A constant
+    frame (``hi = lo``, e.g. a dark frame) maps to 0."""
     scaled = (x - lo) / (hi - lo) * F.lit(float(2 ** 8 - 1)) + F.lit(0.499999999)
-    return F.floor(scaled).cast("int")
+    return F.when(hi == lo, F.lit(0)).otherwise(F.floor(scaled).cast("int"))
 
 
 def energy_axis_kev(channel: Column, offset: float, increment: float) -> Column:

@@ -60,9 +60,20 @@ def publish_documents(files: DataFrame, dataset_col: F.Column | None = None,
                       publisher: str = "picoprobedataflow-spark") -> DataFrame:
     """S15: one DataCite-style publish document per dataset directory
     (the reference publishes one doc per timestamped dest dir,
-    main.py:57-93). ``files[]`` is an array<struct> aggregated from the
-    per-file manifest; ``dc`` carries titles/dates/formats."""
-    manifest = file_manifest(files)
+    main.py:57-93), from a directory scan."""
+    return manifest_documents(file_manifest(files), dataset_col,
+                              exp_type, publisher)
+
+
+def manifest_documents(manifest: DataFrame,
+                       dataset_col: F.Column | None = None,
+                       exp_type: str = "hyperspectral_imaging",
+                       publisher: str = "picoprobedataflow-spark"
+                       ) -> DataFrame:
+    """S15 from a :func:`file_manifest` frame, so a flow publishes the
+    checksums its Transfer step already took: ``files[]`` is an
+    array<struct> aggregated from the per-file manifest; ``dc`` carries
+    titles/dates/formats."""
     dataset = (dataset_col if dataset_col is not None
                else S.path_parent("path"))
     per_ds = (manifest

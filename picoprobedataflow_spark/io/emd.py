@@ -1,15 +1,23 @@
 """EMD (HDF5-based Velox) extraction — the reference's scientific scan
 (S4/S5: ``hs.load`` + 3-D signal selection,
-``picoprobe/tools/hyperspectral.py:51-66``) as an Arrow-batched
-``mapInPandas`` kernel over ``binaryFile`` rows.
+``picoprobe/tools/hyperspectral.py:51-66``) as Arrow-batched
+``mapInPandas`` kernels over ``binaryFile`` rows.
 
 Spark has no native HDF5 source, so this is the one place the engine
 drops to Python — per SURVEY §2.10 the per-file dict-in/dict-out
 Gladier tool maps exactly onto a grouped/map-batch kernel. The h5py
 dependency is import-gated: absent (as in this container), a
 deterministic FAKE-EMD binary format stands in so the Spark plumbing
-(schema, batching, long-form explosion) is real and tested; the h5py
-branch is the identical code path with a different byte parser.
+(schema, batching, explosion) is real and tested; the h5py branch is
+the identical code path with a different byte parser.
+
+The flows parse each file once and reduce inside the kernel:
+:func:`reduce_cubes` returns one row per file (image and spectrum as
+numpy sums, plus the signal rows) and :func:`normalize_stacks` returns
+the normalized frame pixels, so the Spark/Python boundary carries
+about as many values as the results hold. :func:`extract_cube_longform`
+keeps the relational long form, which the tests, the catalog oracle
+and the benchmark probes check against.
 
 FAKE-EMD layout (little-endian):
   magic b'FEMD' | uint16 n_signals | per signal:
@@ -27,6 +35,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 try:  # pragma: no cover - not present in this container
     import h5py  # type: ignore
@@ -36,13 +45,20 @@ except Exception:  # pragma: no cover
     h5py = None
     HAS_H5PY = False
 
-#: Output schema of signal extraction (one row per signal in the file).
-SIGNALS_SCHEMA = ("path string, signal_index int, title string, "
-                  "ndim int, dims array<int>, metadata string")
-
 #: Long-form hyperspectral cube schema (SURVEY §1.1: the idiomatic
 #: Spark shape for the (X, Y, S) cube).
 CUBE_SCHEMA = "path string, x int, y int, channel int, counts double"
+
+#: Per-file reductions of :func:`reduce_cubes`: image (row-major over
+#: (x, y), ``ny`` wide), spectrum, and the file's signal rows (one per
+#: signal in the file).
+REDUCED_SCHEMA = (
+    "path string, ny int, image array<double>, spectrum array<double>, "
+    "signals array<struct<signal_index: int, title: string, ndim: int, "
+    "dims: array<int>, metadata: string>>")
+
+#: Normalized frame pixels of :func:`normalize_stacks`.
+FRAMES_PX_SCHEMA = "path string, t int, x int, y int, px int"
 
 
 def write_fake_emd(signals: list[tuple[str, np.ndarray, dict]]) -> bytes:
@@ -113,23 +129,6 @@ def _parse(content: bytes) -> list[tuple[str, np.ndarray, str]]:
     return _parse_hdf5(content)
 
 
-def extract_signals(files: DataFrame) -> DataFrame:
-    """S4: binaryFile rows → one row per contained signal. Arrow-
-    batched; executes where the bytes were read (no shuffle)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for i, (title, arr, meta) in enumerate(_parse(bytes(content))):
-                    rows.append((path, i, title, arr.ndim,
-                                 list(arr.shape), meta))
-            yield pd.DataFrame(rows, columns=[
-                "path", "signal_index", "title", "ndim", "dims", "metadata"])
-
-    return files.select("path", "content").mapInPandas(gen, SIGNALS_SCHEMA)
-
-
 def _register_for_shipping() -> None:
     """Ship this module's code inside the serialized task instead of
     requiring ``picoprobedataflow_spark`` on every executor's
@@ -148,20 +147,28 @@ def _register_for_shipping() -> None:
 _register_for_shipping()
 
 
+def _first_cube(signals: list[tuple[str, np.ndarray, str]]
+                ) -> np.ndarray | None:
+    """S5: the first 3-D signal of a parsed file (the reference's
+    signal-of-interest scan, hyperspectral.py:54-66), or None."""
+    for _title, arr, _meta in signals:
+        if arr.ndim == 3:
+            return arr
+    return None
+
+
 def extract_cube_longform(files: DataFrame) -> DataFrame:
-    """S5 + cube explosion: select the first 3-D signal per file (the
-    reference's signal-of-interest scan, hyperspectral.py:54-66) and
+    """S5 + cube explosion: select the first 3-D signal per file and
     emit the cube in long form (x, y, channel, counts) — after this,
-    every reduction (A12/A13) is a plain groupBy that Catalyst owns."""
+    every reduction (A12/A13) is a plain groupBy that Catalyst owns.
+    The flows reduce inside the kernel instead (:func:`reduce_cubes`);
+    this form stays as the relational reference the tests and the
+    catalog oracle check against."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for path, content in zip(pdf["path"], pdf["content"]):
-                cube = None
-                for title, arr, meta in _parse(bytes(content)):
-                    if arr.ndim == 3:
-                        cube = arr
-                        break
+                cube = _first_cube(_parse(bytes(content)))
                 if cube is None:
                     continue  # reference raises; relationally: no rows
                 nx, ny, ns = cube.shape
@@ -176,3 +183,81 @@ def extract_cube_longform(files: DataFrame) -> DataFrame:
                 })
 
     return files.select("path", "content").mapInPandas(gen, CUBE_SCHEMA)
+
+
+def reduce_cubes(files: DataFrame) -> DataFrame:
+    """S4 + S5 + A12/A13 in one parse per file: one row per file with
+    the image ``Σ_channel cube`` (row-major over (x, y), ``ny`` wide)
+    and the spectrum ``Σ_(x,y) cube`` as arrays, plus the file's signal
+    rows. A file without a 3-D signal keeps its signals and gets null
+    image/spectrum. The long-form cube never crosses into the JVM: the
+    kernel hands back ~nx·ny+ns numbers per file instead of nx·ny·ns
+    rows."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for path, content in zip(pdf["path"], pdf["content"]):
+                signals = _parse(bytes(content))
+                cube = _first_cube(signals)
+                image = spectrum = ny = None
+                if cube is not None:
+                    c64 = cube.astype("float64")
+                    ny = cube.shape[1]
+                    image = c64.sum(axis=2).ravel()
+                    spectrum = c64.sum(axis=(0, 1))
+                rows.append((path, ny, image, spectrum, [
+                    {"signal_index": i, "title": title, "ndim": arr.ndim,
+                     "dims": list(arr.shape), "metadata": meta}
+                    for i, (title, arr, meta) in enumerate(signals)]))
+            yield pd.DataFrame(rows, columns=[
+                "path", "ny", "image", "spectrum", "signals"])
+
+    return files.select("path", "content").mapInPandas(gen, REDUCED_SCHEMA)
+
+
+def reduced_signals(reduced: DataFrame) -> DataFrame:
+    """One row per signal of each :func:`reduce_cubes` row: path,
+    signal_index, title, ndim, dims, metadata."""
+    return (reduced.select("path", F.explode("signals").alias("s"))
+                   .select("path", "s.*"))
+
+
+def extract_signals(files: DataFrame) -> DataFrame:
+    """S4: binaryFile rows → one row per contained signal. Arrow-
+    batched; executes where the bytes were read (no shuffle)."""
+    return reduced_signals(reduce_cubes(files))
+
+
+def normalize_stacks(files: DataFrame) -> DataFrame:
+    """A14 + F10 in one parse per file: the first 3-D signal as a
+    ``(T, X, Y)`` stack, each frame min/max-normalized to uint8 px with
+    numpy — the operations and their order of
+    :func:`..functions.scalar.normalize_to_uint8`, so every pixel equals
+    the relational path's; a constant frame is all 0."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for path, content in zip(pdf["path"], pdf["content"]):
+                stack = _first_cube(_parse(bytes(content)))
+                if stack is None:
+                    continue
+                v = stack.astype("float64")
+                lo = v.min(axis=(1, 2), keepdims=True)
+                span = v.max(axis=(1, 2), keepdims=True) - lo
+                flat = span == 0
+                scaled = ((v - lo) / np.where(flat, 1.0, span)
+                          * float(2 ** 8 - 1) + 0.499999999)
+                px = np.where(flat, 0, np.floor(scaled)).astype("int32")
+                nt, nx, ny = v.shape
+                ts, xs, ys = np.meshgrid(np.arange(nt), np.arange(nx),
+                                         np.arange(ny), indexing="ij")
+                yield pd.DataFrame({
+                    "path": path,
+                    "t": ts.ravel().astype("int32"),
+                    "x": xs.ravel().astype("int32"),
+                    "y": ys.ravel().astype("int32"),
+                    "px": px.ravel(),
+                })
+
+    return files.select("path", "content").mapInPandas(gen, FRAMES_PX_SCHEMA)

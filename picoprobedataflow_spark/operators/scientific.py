@@ -1,15 +1,16 @@
 """Scientific kernels (reference pillar 2): hyperspectral cube
-reductions and temporal-stack frame normalization, operating on the
-long-form tables produced by :mod:`..io.emd`.
+reductions and temporal-stack frame normalization.
 
-Once the cube is long-form, the reference's numpy axis-sums
-(``hs_image.sum(axis=2)`` / ``sum(axis=(0,1))``,
-tools/hyperspectral.py:96,104) are plain groupBy aggregates —
-map-side-combined, shuffle on the (small) output key space, fully
-Catalyst-optimized. Frame normalization (tools/temporal.py:21-35) is a
-grouped min/max + the uint8 scale expression; the YOLO inference stage
-of temporal.py is modeled in :mod:`.multimodal` as a batched model UDF
-stub.
+Two forms of each. Over the long-form tables of :mod:`..io.emd`, the
+reference's numpy axis-sums (``hs_image.sum(axis=2)`` /
+``sum(axis=(0,1))``, tools/hyperspectral.py:96,104) are plain groupBy
+aggregates and frame normalization (tools/temporal.py:21-35) is a
+grouped min/max + the uint8 scale expression; the catalog oracle and
+the tests run this form. The flows take the per-file sums that
+:func:`..io.emd.reduce_cubes` computes in its kernel, and
+:func:`image_from_sums` / :func:`spectrum_from_sums` project them onto
+the same schemas. The YOLO inference stage of temporal.py is modeled
+in :mod:`.multimodal` as a batched model UDF stub.
 """
 
 from __future__ import annotations
@@ -23,6 +24,10 @@ from picoprobedataflow_spark.functions.scalar import (
 )
 
 
+#: Energy-axis calibration of the reference (hyperspectral.py:69-74).
+X_OFFSET, X_INCREMENT = -479.0021, 5.0
+
+
 def spectral_image(cube: DataFrame,
                    keys: tuple[str, ...] = ("path",)) -> DataFrame:
     """A12 — image = Σ over channel axis: one pixel row per (x, y)."""
@@ -31,8 +36,8 @@ def spectral_image(cube: DataFrame,
 
 
 def spectrum(cube: DataFrame, keys: tuple[str, ...] = ("path",),
-             x_offset: float = -479.0021,
-             x_increment: float = 5.0) -> DataFrame:
+             x_offset: float = X_OFFSET,
+             x_increment: float = X_INCREMENT) -> DataFrame:
     """A13 + F11 — spectrum = Σ over spatial axes, with the calibrated
     energy axis attached (hyperspectral.py:69-74,104)."""
     return (cube.groupBy(*keys, "channel")
@@ -40,6 +45,27 @@ def spectrum(cube: DataFrame, keys: tuple[str, ...] = ("path",),
                 .withColumn("energy_kev",
                             energy_axis_kev(F.col("channel"),
                                             x_offset, x_increment)))
+
+
+def image_from_sums(reduced: DataFrame) -> DataFrame:
+    """A12 over :func:`..io.emd.reduce_cubes` rows: the per-file image
+    array back to one pixel row per (path, x, y), in the
+    :func:`spectral_image` schema."""
+    return (reduced.select("path", "ny", F.posexplode("image"))
+                   .select("path",
+                           F.expr("CAST(pos div ny AS INT)").alias("x"),
+                           (F.col("pos") % F.col("ny")).alias("y"),
+                           F.col("col").alias("intensity")))
+
+
+def spectrum_from_sums(reduced: DataFrame) -> DataFrame:
+    """A13 + F11 over :func:`..io.emd.reduce_cubes` rows: one row per
+    (path, channel), in the :func:`spectrum` schema."""
+    return (reduced.select("path", F.posexplode("spectrum"))
+                   .select("path", F.col("pos").alias("channel"),
+                           F.col("col").alias("counts"),
+                           energy_axis_kev(F.col("pos"), X_OFFSET,
+                                           X_INCREMENT).alias("energy_kev")))
 
 
 def normalize_frames(frames: DataFrame,

@@ -55,8 +55,9 @@ SELECT 'spectrum', channel, NULL,
 FROM cube GROUP BY channel
 UNION ALL
 SELECT 'frames_u8', f.t,
-       CAST(floor((f.intensity - b.lo) / (b.hi - b.lo) * 255.0
-                  + 0.499999999) AS INT),
+       CASE WHEN b.hi = b.lo THEN 0
+            ELSE CAST(floor((f.intensity - b.lo) / (b.hi - b.lo) * 255.0
+                            + 0.499999999) AS INT) END,
        CAST(count(*) AS DOUBLE), NULL
 FROM frames f JOIN bounds b ON f.t = b.t
 GROUP BY 2, 3
@@ -72,8 +73,9 @@ def scientific_reduce_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``(x_offset + x_increment·arange(n))/1000`` keV, :69-74,104);
     ``frames_u8`` = per-frame min/max → uint8 histogram (A14/F10,
     the ``(x-min)/(max-min)*255 + 0.499999999`` encode,
-    tools/temporal.py:21-35) — grouped bounds, broadcast-join back,
-    exact double expression on both engines."""
+    tools/temporal.py:21-35; a constant frame is all 0) — grouped
+    bounds, broadcast-join back, exact double expression on both
+    engines."""
     prep(spark)
     cube = SC.synthetic_cube(spark, 32, 32, 16)
     nuld = F.lit(None).cast("double")

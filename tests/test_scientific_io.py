@@ -103,6 +103,20 @@ def test_normalize_frames_range(spark):
     assert stats[0] == 0 and stats[1] == 255
 
 
+def test_normalize_frames_constant_frame_is_zero(spark):
+    """``hi == lo`` (a dark frame) gives px 0 rather than a division
+    by zero; a frame with spread still spans 0..255."""
+    frames = spark.createDataFrame(
+        [(t, x, 0, v) for t, vals in ((0, (3.0, 3.0, 3.0)),
+                                     (1, (1.0, 2.0, 5.0)))
+         for x, v in enumerate(vals)],
+        "t int, x int, y int, intensity double")
+    px = sorted(tuple(r) for r in
+                SC.normalize_frames(frames, keys=("t",)).collect())
+    assert px == [(0, 0, 0, 0), (0, 1, 0, 0), (0, 2, 0, 0),
+                  (1, 0, 0, 0), (1, 1, 0, 64), (1, 2, 0, 255)]
+
+
 def test_multimodal_features_and_detection(spark):
     img = MM.make_fake_image(16, 12, seed=1)
     df = spark.createDataFrame(
