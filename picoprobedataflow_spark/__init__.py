@@ -26,3 +26,23 @@ Modules
 __version__ = "0.1.0"
 
 from picoprobedataflow_spark.session import get_spark  # noqa: F401
+
+
+def ship_by_value(module_name: str) -> None:
+    """Ship module ``module_name``'s code inside the serialized task
+    instead of requiring ``picoprobedataflow_spark`` on every
+    executor's PYTHONPATH — the Spark analog of the reference shipping
+    its tool functions by serialization to funcX workers (hence the
+    reference's body-level imports, temporal.py:12-19). Without this, a
+    driver launched outside the repo dies in the Python worker with
+    ModuleNotFoundError.
+
+    The registry is PySpark's own ``pyspark.cloudpickle``, the one that
+    pickles UDFs and ``mapInPandas`` kernels; a standalone
+    ``cloudpickle`` install keeps a separate registry Spark never
+    reads."""
+    import sys
+
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(sys.modules[module_name])

@@ -104,20 +104,22 @@ def manifest_documents(manifest: DataFrame,
 def incremental_ingest(new_files: DataFrame, processed: DataFrame | None) -> DataFrame:
     """S3/S11: checksum-level incremental ingest — keep only files
     whose (path, sha256) is unseen. Batch-∖-state ≙ the reference's
-    ``CheckPoint.seen`` + Transfer sync_level=checksum skip, through
-    the broadcast semi/anti helper (round 17): the direct anti join
-    shuffled the ACCUMULATED processed log on every ingest pass —
-    O(log lifetime) where the pass's contract is ∝ new files. The
-    new batch's (path, sha256) key set is ingest-cadence-bounded
-    (broadcast-size)."""
-    from picoprobedataflow_spark.streaming.dedup_stream import \
-        batch_anti_state
+    ``CheckPoint.seen`` + Transfer sync_level=checksum skip.
+
+    The manifest (one content read and one hash per file) is evaluated
+    once, as the anti join's left side. The processed log is cut down
+    to the scanned paths by a broadcast semi join against
+    ``new_files.select("path")`` — a path-only scan reads no file
+    content — so the log is scanned map-side, never shuffled, and the
+    ≤-scan-sized rest broadcasts into the anti join."""
     manifest = file_manifest(new_files)
     if processed is None:
         return manifest
-    return batch_anti_state(manifest,
-                            processed.select("path", "sha256"),
-                            ["path", "sha256"])
+    seen = (processed.select("path", "sha256")
+            .join(F.broadcast(new_files.select("path")), "path",
+                  "left_semi"))
+    return manifest.join(F.broadcast(seen), ["path", "sha256"],
+                         "left_anti")
 
 
 def write_catalog(docs: DataFrame, path: str, mode: str = "append") -> None:

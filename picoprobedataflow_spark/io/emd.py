@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from picoprobedataflow_spark import ship_by_value
+
 try:  # pragma: no cover - not present in this container
     import h5py  # type: ignore
 
@@ -49,13 +51,17 @@ except Exception:  # pragma: no cover
 #: Spark shape for the (X, Y, S) cube).
 CUBE_SCHEMA = "path string, x int, y int, channel int, counts double"
 
+#: One signal of a file: an element of :data:`REDUCED_SCHEMA`'s
+#: ``signals`` and, after ``path``, a row of the ``femd`` source.
+SIGNAL_FIELDS = ("signal_index int, title string, ndim int, "
+                 "dims array<int>, metadata string")
+
 #: Per-file reductions of :func:`reduce_cubes`: image (row-major over
 #: (x, y), ``ny`` wide), spectrum, and the file's signal rows (one per
 #: signal in the file).
 REDUCED_SCHEMA = (
     "path string, ny int, image array<double>, spectrum array<double>, "
-    "signals array<struct<signal_index: int, title: string, ndim: int, "
-    "dims: array<int>, metadata: string>>")
+    f"signals array<struct<{SIGNAL_FIELDS}>>")
 
 #: Normalized frame pixels of :func:`normalize_stacks`.
 FRAMES_PX_SCHEMA = "path string, t int, x int, y int, px int"
@@ -129,22 +135,7 @@ def _parse(content: bytes) -> list[tuple[str, np.ndarray, str]]:
     return _parse_hdf5(content)
 
 
-def _register_for_shipping() -> None:
-    """Ship this module's code inside the serialized task instead of
-    requiring ``picoprobedataflow_spark`` on every executor's
-    PYTHONPATH — the Spark analog of the reference shipping its tool
-    functions by serialization to funcX workers (hence the reference's
-    body-level imports, temporal.py:12-19). Without this, a driver
-    launched outside the repo dies in the Python worker with
-    ModuleNotFoundError."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-
-
-_register_for_shipping()
+ship_by_value(__name__)
 
 
 def _first_cube(signals: list[tuple[str, np.ndarray, str]]

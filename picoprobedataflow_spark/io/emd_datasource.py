@@ -15,14 +15,15 @@ from __future__ import annotations
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from picoprobedataflow_spark import ship_by_value
+
 # Captured at module level (NOT imported inside read()): with both this
 # module and io.emd registered for cloudpickle by-value shipping, the
 # reference serializes into the task; a runtime import on the worker
 # would instead demand the package on the executor PYTHONPATH.
-from picoprobedataflow_spark.io.emd import _parse
+from picoprobedataflow_spark.io.emd import SIGNAL_FIELDS, _parse
 
-SIGNALS_SCHEMA = ("path string, signal_index int, title string, "
-                  "ndim int, dims array<int>, metadata string")
+SIGNALS_SCHEMA = f"path string, {SIGNAL_FIELDS}"
 
 
 class EmdDataSourceReader(DataSourceReader):
@@ -68,13 +69,4 @@ def register(spark) -> None:
     spark.dataSource.register(EmdDataSource)
 
 
-def _register_for_shipping() -> None:
-    """Ship this module by value too (see io.emd)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-
-
-_register_for_shipping()
+ship_by_value(__name__)

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from picoprobedataflow_spark import ship_by_value
+
 IMAGE_SCHEMA = ("path string, width int, height int, image binary, "
                 "meta string")
 FEATURES_SCHEMA = ("path string, width int, height int, mean_px double, "
@@ -263,17 +265,7 @@ def detect_objects(images: DataFrame, conf_threshold: float = 0.5,
                   .mapInPandas(gen, BOXES_SCHEMA))
 
 
-def _register_for_shipping() -> None:
-    """Serialize this module's kernels by value so executors don't
-    need the package importable (see io.emd._register_for_shipping)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-
-
-_register_for_shipping()
+ship_by_value(__name__)
 
 
 def make_fake_image(width: int, height: int, seed: int = 0) -> bytes:

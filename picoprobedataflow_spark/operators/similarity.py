@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from picoprobedataflow_spark import ship_by_value
 from picoprobedataflow_spark.functions import vectors as V
 
 
@@ -348,19 +349,7 @@ def srp_bucket_matrix(emb: DataFrame, n_planes: int = 8, dim: int = 64,
     return emb.withColumn(out_col, _bucket(F.col(vec_col)))
 
 
-def _register_for_shipping() -> None:
-    """Ship this module by value so the pandas-UDF kernel above works
-    when the driver imports from outside the repo (see
-    io/emd.py:_register_for_shipping and the executor-code-shipping
-    note: driver-side sys.path never reaches Python workers)."""
-    import sys
-
-    import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-
-
-_register_for_shipping()
+ship_by_value(__name__)
 
 
 def srp_ann_search(emb: DataFrame, query_vec: list[float], k: int = 5,

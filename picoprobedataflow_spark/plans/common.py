@@ -14,6 +14,10 @@ parity are in force:
   layout-adaptive conversion contract — ALL ``ts`` math (batch and
   stream) goes through it to exact int64 epoch-µs, the unit DuckDB's
   ``epoch_us`` produces.
+
+Streaming catalog queries run through :func:`drain_stream_to_local`,
+a drain of the one micro-batch driver (:mod:`..streaming.loop`: its
+trigger policy and drain-timeout rule).
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ from pyspark.sql import functions as F
 
 from picoprobedataflow_spark.io.tables import load_table
 from picoprobedataflow_spark.session import prep
+from picoprobedataflow_spark.streaming.loop import drain
 
 
 def tbl(spark: SparkSession, sf_dir: str, name: str,
@@ -80,31 +85,25 @@ def drain_stream_to_local(spark: SparkSession, agg: DataFrame,
                           output_mode: str = "complete",
                           timeout: int = 300) -> DataFrame:
     """Execute a streaming aggregate to completion and return its rows
-    as a plain local DataFrame: availableNow drain into a uniquely-
-    named memory sink, ephemeral checkpoint (tempdir, removed after the
-    drain), sink view dropped once its rows are materialized — so
-    repeated driver invocations leak neither disk nor session state."""
+    as a plain local DataFrame: a drain into a uniquely-named memory
+    sink, ephemeral checkpoint (tempdir, removed after the drain), sink
+    view dropped once its rows are materialized — so repeated driver
+    invocations leak neither disk nor session state."""
     import shutil
     import tempfile
     import uuid
 
     name = f"stream_sink_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix=f"{name}_ckpt_")
-    q = (agg.writeStream.outputMode(output_mode)
-         .format("memory").queryName(name)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
     try:
-        if not q.awaitTermination(timeout):
-            raise TimeoutError(
-                f"stream drain {name} did not finish in {timeout}s")
+        drain(agg, ckpt, ("memory", name), name, timeout,
+              output_mode=output_mode)
         sink = spark.table(name)
         # The memory sink already holds its rows on the driver; lift
         # them into a local DataFrame so the sink view and checkpoint
         # dir can be cleaned up before returning.
         rows, schema = sink.collect(), sink.schema
     finally:
-        q.stop()
         spark.catalog.dropTempView(name)
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.createDataFrame(rows, schema)

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from picoprobedataflow_spark.streaming import loop
 from picoprobedataflow_spark.streaming.dedup_stream import (
     _state, _write_epoch)
 
@@ -140,14 +141,8 @@ def run_cms_stream(doc_stream: DataFrame, state_dir: str,
         _write_epoch(_cells_of(batch, text_col, w, d),
                      cell_dir, epoch_id)
 
-    writer = (doc_stream.writeStream
-              .foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return loop.start(doc_stream, checkpoint_dir, _process,
+                      available_now)
 
 
 def merged_cells(spark: SparkSession, state_dir: str) -> DataFrame:

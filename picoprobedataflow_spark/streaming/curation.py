@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from picoprobedataflow_spark.streaming import loop
 from picoprobedataflow_spark.streaming.dedup_stream import (
     _state, _write_epoch, batch_anti_state)
 
@@ -245,11 +246,5 @@ def run_curation_stream(doc_stream: DataFrame, state_dir: str,
             spark.createDataFrame(funnel, FUNNEL_SCHEMA),
             funnel_dir, epoch_id)
 
-    writer = (doc_stream.writeStream
-              .foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return loop.start(doc_stream, checkpoint_dir, _process,
+                      available_now)

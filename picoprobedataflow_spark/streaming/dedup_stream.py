@@ -37,6 +37,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from picoprobedataflow_spark.operators.dedup import (
     HashFn, incremental_minhash_dedup, portable_hash64)
+from picoprobedataflow_spark.streaming import loop
 
 SIG_SCHEMA = "doc_id long, salt bigint, minhash bigint"
 BAND_SCHEMA = "doc_id long, band bigint, band_sig string"
@@ -304,14 +305,8 @@ def run_incremental_dedup_stream(doc_stream: DataFrame, state_dir: str,
             new_sigs.unpersist()
             new_bands.unpersist()
 
-    writer = (doc_stream.writeStream
-              .foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return loop.start(doc_stream, checkpoint_dir, _process,
+                      available_now)
 
 
 PHASH_STATE_SCHEMA = "path string, simhash long"
@@ -376,11 +371,5 @@ def run_image_dedup_stream(image_stream: DataFrame, state_dir: str,
         finally:
             new_sigs.unpersist()
 
-    writer = (image_stream.writeStream
-              .foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return loop.start(image_stream, checkpoint_dir, _process,
+                      available_now)

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from picoprobedataflow_spark.streaming import loop
 from picoprobedataflow_spark.streaming.dedup_stream import (
     _fs_list, _state, _write_epoch)
 
@@ -211,14 +212,8 @@ def run_pagerank_stream(edge_stream: DataFrame, state_dir: str,
         _write_epoch(out.select("node", "pr"), rank_dir, epoch_id)
         _write_epoch(new_edges, edge_dir, epoch_id)
 
-    writer = (edge_stream.writeStream
-              .foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return loop.start(edge_stream, checkpoint_dir, _process,
+                      available_now)
 
 
 def latest_ranks(spark, state_dir: str) -> DataFrame:

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from picoprobedataflow_spark.operators.similarity import _assign_cells
+from picoprobedataflow_spark.streaming import loop
 
 
 def run_ivf_index_stream(vec_stream: DataFrame, cent_rows,
@@ -95,14 +96,8 @@ def run_ivf_index_stream(vec_stream: DataFrame, cent_rows,
                  .partitionBy("epoch", "cell")
                  .parquet(index_dir))
 
-    writer = (vec_stream.writeStream
-              .foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return loop.start(vec_stream, checkpoint_dir, _process,
+                      available_now)
 
 
 def read_ivf_index(spark, index_dir: str) -> DataFrame:

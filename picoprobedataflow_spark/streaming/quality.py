@@ -14,6 +14,10 @@ table). Replayed batches (failure recovery) re-append their rows —
 dedupe on ``batch_id`` at read, the same idempotency contract the
 dedup stream documents for its epoch partitions.
 
+Every stream here is a drain through :func:`.loop.drain`
+(``availableNow``; past ``timeout`` the query is stopped and a
+``TimeoutError`` names the stream), so none returns a partial table.
+
 Reference analog: the watcher validates each arriving file before
 acting on it (picoprobe/utils.py:118-140 checks inside the event
 handler); here the validation is declarative, batched and emits an
@@ -25,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from picoprobedataflow_spark.streaming import loop
 
 
 def dq_gate_stream(spark: SparkSession, src_dir: str, ckpt_dir: str,
@@ -41,16 +47,8 @@ def dq_gate_stream(spark: SparkSession, src_dir: str, ckpt_dir: str,
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_dir))
 
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"dq gate drain did not finish in {timeout}s")
+    loop.drain(spark.readStream.schema(schema).parquet(src_dir),
+               ckpt_dir, _process, "dq gate", timeout)
 
 
 def contam_gate_stream(spark: SparkSession, src_dir: str,
@@ -120,16 +118,8 @@ def contam_gate_stream(spark: SparkSession, src_dir: str,
         (gated.withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_dir))
 
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"contamination gate drain did not finish in {timeout}s")
+    loop.drain(spark.readStream.schema(schema).parquet(src_dir),
+               ckpt_dir, _process, "contamination gate", timeout)
 
 
 def decontam_stream(spark: SparkSession, src_dir: str,
@@ -210,16 +200,8 @@ def decontam_stream(spark: SparkSession, src_dir: str,
         (cleaned.withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_dir))
 
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"decontam stream drain did not finish in {timeout}s")
+    loop.drain(spark.readStream.schema(schema).parquet(src_dir),
+               ckpt_dir, _process, "decontam stream", timeout)
 
 
 #: Output schema of :func:`domain_quota_stream` rows (norm_url is
@@ -314,15 +296,8 @@ def domain_quota_stream(spark: SparkSession, src_dir: str,
                stateStructType="kept long",
                outputMode="append",
                timeoutConf=GroupStateTimeout.NoTimeout))
-    q = (out.writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .format("parquet").option("path", out_dir)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"domain quota drain did not finish in {timeout}s")
+    loop.drain(out, ckpt_dir, ("parquet", out_dir), "domain quota",
+               timeout)
 
 
 #: Output schema of :func:`boiler_flag_stream` rows — one row per
@@ -430,15 +405,8 @@ def _prefix_df_stream(keyed: DataFrame, key_col: str,
                stateStructType="df long",
                outputMode="append",
                timeoutConf=GroupStateTimeout.NoTimeout))
-    q = (out.writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .format("parquet").option("path", out_dir)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"{what} stream drain did not finish in {timeout}s")
+    loop.drain(out, ckpt_dir, ("parquet", out_dir), f"{what} stream",
+               timeout)
 
 
 LINE_STREAM_OUT_SCHEMA = ("doc_id long, idx long, line_h long, "
@@ -520,16 +488,8 @@ def robots_gate_stream(spark: SparkSession, src_dir: str,
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_dir))
 
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"robots gate drain did not finish in {timeout}s")
+    loop.drain(spark.readStream.schema(schema).parquet(src_dir),
+               ckpt_dir, _process, "robots gate", timeout)
 
 
 def psi_drift_stream(spark: SparkSession, src_dir: str,
@@ -566,16 +526,8 @@ def psi_drift_stream(spark: SparkSession, src_dir: str,
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_dir))
 
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"psi drift drain did not finish in {timeout}s")
+    loop.drain(spark.readStream.schema(schema).parquet(src_dir),
+               ckpt_dir, _process, "psi drift", timeout)
 
 
 def ks_drift_stream(spark: SparkSession, src_dir: str,
@@ -613,16 +565,8 @@ def ks_drift_stream(spark: SparkSession, src_dir: str,
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_dir))
 
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"ks drift drain did not finish in {timeout}s")
+    loop.drain(spark.readStream.schema(schema).parquet(src_dir),
+               ckpt_dir, _process, "ks drift", timeout)
 
 
 def quality_score_stream(spark: SparkSession, src_dir: str,
@@ -660,16 +604,8 @@ def quality_score_stream(spark: SparkSession, src_dir: str,
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_dir))
 
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"quality score drain did not finish in {timeout}s")
+    loop.drain(spark.readStream.schema(schema).parquet(src_dir),
+               ckpt_dir, _process, "quality score", timeout)
 
 
 def nb_score_stream(spark: SparkSession, src_dir: str,
@@ -709,16 +645,8 @@ def nb_score_stream(spark: SparkSession, src_dir: str,
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_dir))
 
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"nb score drain did not finish in {timeout}s")
+    loop.drain(spark.readStream.schema(schema).parquet(src_dir),
+               ckpt_dir, _process, "nb score", timeout)
 
 
 def chi2_drift_stream(spark: SparkSession, src_dir: str,
@@ -757,13 +685,5 @@ def chi2_drift_stream(spark: SparkSession, src_dir: str,
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_dir))
 
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"chi2 drift drain did not finish in {timeout}s")
+    loop.drain(spark.readStream.schema(schema).parquet(src_dir),
+               ckpt_dir, _process, "chi2 drift", timeout)

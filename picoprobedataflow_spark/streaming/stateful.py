@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from picoprobedataflow_spark import ship_by_value
+
 STATE_SCHEMA = "n long, total double, last_us long"
 OUTPUT_SCHEMA = "user_id long, n long, total double, last_us long"
 
@@ -46,15 +48,7 @@ def running_user_totals(events: DataFrame) -> DataFrame:
                 timeoutConf=GroupStateTimeout.NoTimeout))
 
 
-def _register_for_shipping() -> None:
-    import sys
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-
-
-_register_for_shipping()
+ship_by_value(__name__)
 
 
 EXPIRING_STATE_SCHEMA = "n long, total double, last_ms long"

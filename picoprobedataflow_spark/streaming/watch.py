@@ -4,8 +4,10 @@ loop (EP1) as Structured Streaming.
 Mapping (SURVEY §2.9):
 
 - ST1 trigger cadence: the 1 s poll loop (``picoprobe/utils.py:97-99``)
-  → ``trigger(processingTime=...)`` / ``availableNow`` for drains;
-  ``maxFilesPerTrigger`` is the simulator's arrival pacing.
+  → the micro-batch driver's trigger policy (:mod:`.loop`: 1 s
+  processing time, ``availableNow`` for drains), shared by every
+  streaming loop; ``maxFilesPerTrigger`` is the simulator's arrival
+  pacing.
 - ST2 exactly-once per file: ``CheckPoint.seen`` + append-only seen
   file (``utils.py:109-131``) → the file source's checkpointed offset
   log; restart-safe with no custom state.
@@ -27,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from picoprobedataflow_spark.io.binary_files import file_manifest
+from picoprobedataflow_spark.streaming import loop
 
 
 def file_watch_stream(spark: SparkSession, directory: str,
@@ -65,14 +68,7 @@ def run_ingest_stream(stream: DataFrame, checkpoint_dir: str,
         if output_path is not None:
             manifest.write.mode("append").parquet(output_path)
 
-    writer = (stream.writeStream
-              .foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return loop.start(stream, checkpoint_dir, _process, available_now)
 
 
 def interval_attribution_join(clicks: DataFrame, purchases: DataFrame,

@@ -5,6 +5,7 @@ end to end on FAKE-EMD fixtures."""
 from __future__ import annotations
 
 import json
+import re
 
 import numpy as np
 import pytest
@@ -94,6 +95,31 @@ def test_incremental_ingest_skips_seen(spark, emd_dir, tmp_path):
     files2 = BF.scan_binary_dir(spark, str(d), glob="*.emd")
     changed = BF.incremental_ingest(files2, processed)
     assert [r.filename for r in changed.collect()] == ["a.emd"]
+
+
+def test_incremental_ingest_reads_and_hashes_once(spark, emd_dir):
+    """An incremental pass reads each scanned file's content once and
+    hashes it once (one sha256, one sha512); the processed log is cut
+    down by a path-only scan and is never shuffled."""
+    d, _ = emd_dir
+    processed = BF.file_manifest(
+        BF.scan_binary_dir(spark, str(d), glob="*.emd")).localCheckpoint(
+            eager=True)
+    ones = np.ones((2, 2, 2), dtype="f4")
+    (d / "a.emd").write_bytes(emd.write_fake_emd([("EDS", ones, {})]))
+    (d / "c.emd").write_bytes(emd.write_fake_emd([("new", ones, {})]))
+    out = BF.incremental_ingest(
+        BF.scan_binary_dir(spark, str(d), glob="*.emd"), processed)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    scans = re.findall(r"FileScan binaryFile .*ReadSchema: (struct<.*>)",
+                       plan)
+    assert sorted(scans) == [
+        "struct<path:string,modificationTime:timestamp,length:bigint,"
+        "content:binary>",
+        "struct<path:string>"]
+    assert plan.count("sha2(") == 2
+    assert "Exchange hashpartitioning" not in plan
+    assert sorted(r.filename for r in out.collect()) == ["a.emd", "c.emd"]
 
 
 def test_normalize_frames_range(spark):

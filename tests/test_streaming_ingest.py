@@ -6,7 +6,11 @@ across restarts, with the glob filter applied at the source."""
 from __future__ import annotations
 
 import os
+import time
 
+import pytest
+
+from picoprobedataflow_spark.streaming import loop
 from picoprobedataflow_spark.streaming.watch import (
     file_watch_stream,
     run_ingest_stream,
@@ -24,6 +28,49 @@ def _run_drain(spark, watch_dir, ckpt, out):
     stream = file_watch_stream(spark, watch_dir, glob="*.emd")
     q = run_ingest_stream(stream, ckpt, output_path=out)
     q.awaitTermination(120)
+
+
+def test_continuous_ingest_runs_until_stopped(spark, tmp_path):
+    """``available_now=False`` is the production watch: a loop that
+    keeps triggering, so a file dropped after the start is ingested in
+    a later micro-batch, and the loop stops only when asked."""
+    watch = tmp_path / "incoming"
+    watch.mkdir()
+    out = str(tmp_path / "manifest")
+    q = run_ingest_stream(file_watch_stream(spark, str(watch)),
+                          str(tmp_path / "ckpt"), output_path=out,
+                          available_now=False)
+    try:
+        # hidden name first: the source never lists a half-written file
+        _drop(str(watch), ".simulator-0-a.emd", b"payload-a")
+        os.rename(watch / ".simulator-0-a.emd",
+                  watch / "simulator-0-a.emd")
+        deadline = time.monotonic() + 90
+        while not any(p["numInputRows"] > 0 for p in q.recentProgress):
+            assert q.isActive and time.monotonic() < deadline
+            time.sleep(0.2)
+        assert q.isActive
+    finally:
+        q.stop()
+    assert not q.isActive
+    assert [r.filename for r in spark.read.parquet(out).collect()] == [
+        "simulator-0-a.emd"]
+
+
+def test_drain_timeout_stops_the_loop(spark, tmp_path):
+    """A drain that outlasts its timeout is stopped and raises a
+    ``TimeoutError`` naming the loop; no query is left running."""
+    src = str(tmp_path / "src")
+    spark.range(1).write.parquet(src)
+    before = {q.id for q in spark.streams.active}
+
+    def _slow(batch, epoch_id):
+        time.sleep(3)
+
+    with pytest.raises(TimeoutError, match="slow body drain"):
+        loop.drain(spark.readStream.schema("id long").parquet(src),
+                   str(tmp_path / "ckpt"), _slow, "slow body", timeout=1)
+    assert {q.id for q in spark.streams.active} <= before
 
 
 def test_exactly_once_across_restarts(spark, tmp_path):

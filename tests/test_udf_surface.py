@@ -69,6 +69,7 @@ def test_emd_python_datasource(spark, tmp_path):
     import numpy as np
 
     from picoprobedataflow_spark.io import emd
+    from picoprobedataflow_spark.io.binary_files import scan_binary_dir
     from picoprobedataflow_spark.io.emd_datasource import register
 
     rng = np.random.default_rng(3)
@@ -80,6 +81,13 @@ def test_emd_python_datasource(spark, tmp_path):
     df = spark.read.format("femd").load(str(tmp_path))
     rows = df.collect()
     assert len(rows) == 4  # 2 files × 2 signals
+    # the same signal rows as the flows' kernel over the same files
+    ref = emd.extract_signals(
+        scan_binary_dir(spark, str(tmp_path), glob="*.emd"))
+    assert df.schema == ref.schema
+    assert sorted(rows) == sorted(
+        ref.withColumn("path", F.regexp_replace("path", "^file:", ""))
+        .collect())
     assert {r.title for r in rows} == {"EDS", "flat"}
     cubes = df.filter(F.col("ndim") == 3)
     assert cubes.count() == 2 and cubes.collect()[0].dims == [2, 3, 4]
@@ -87,6 +95,24 @@ def test_emd_python_datasource(spark, tmp_path):
     empty = tmp_path / "empty"
     empty.mkdir()
     assert spark.read.format("femd").load(str(empty)).count() == 0
+
+
+def test_kernel_modules_ship_by_value():
+    """Every module whose kernels run in Python workers is registered
+    for by-value pickling with PySpark's own cloudpickle (a standalone
+    ``cloudpickle`` keeps a registry Spark never reads)."""
+    import importlib
+
+    from pyspark import cloudpickle
+
+    mods = {"picoprobedataflow_spark.io.emd",
+            "picoprobedataflow_spark.io.emd_datasource",
+            "picoprobedataflow_spark.operators.multimodal",
+            "picoprobedataflow_spark.operators.similarity",
+            "picoprobedataflow_spark.streaming.stateful"}
+    for m in mods:
+        importlib.import_module(m)
+    assert mods <= set(cloudpickle.list_registry_pickle_by_value())
 
 
 def test_audio_lane_real_pcm_pipeline(spark):
