@@ -765,7 +765,7 @@ def minhash_vector(docs: DataFrame, num_hashes: int = 16, k: int = 3,
                     ).alias("_hs"))
     # One parsed selectExpr instead of num_hashes Column-API
     # array_min(transform(...)) builds (round 17, the
-    # simhash_signatures / kmeans_assign_expr treatment): each lambda
+    # simhash_signatures / similarity._assign_expr treatment): each lambda
     # construction costs ~a dozen py4j round-trips of pure driver
     # time. The strings parse to the IDENTICAL expression tree —
     # int-literal coefficients, same int64 affine arithmetic — so
@@ -1152,7 +1152,7 @@ def simhash_signatures(docs: DataFrame, bits: int = 32,
         formulation = ("grouped" if _plan_size_bytes(docs)
                        <= SIG_GROUPED_MAX_BYTES else "rowlocal")
     # The per-bit loops are rendered as parsed SQL strings (round 17,
-    # the kmeans_assign_expr treatment): the Column-API forms spent
+    # the similarity._assign_expr treatment): the Column-API forms spent
     # ~0.3-0.8 s of pure DRIVER time per plan build on py4j gateway
     # round-trips — each of the 32 rowlocal folds costs 3 lambda
     # constructions (~a dozen round-trips apiece), the grouped path ~6

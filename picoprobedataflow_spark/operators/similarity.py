@@ -35,6 +35,36 @@ def _cos_py(a, b) -> float:
     return num / (na * nb) if na and nb else 0.0
 
 
+def _check_n_probe(n_probe: int) -> None:
+    """Reject a probe width below one before any Spark job: probing
+    zero cells returns an empty result that looks like no neighbors
+    exist."""
+    if n_probe < 1:
+        raise ValueError(
+            f"n_probe must be >= 1, got {n_probe}: probing zero "
+            f"cells returns an empty result that looks like no "
+            f"neighbors exist")
+
+
+def _probe_cells(cent_rows, qd: list[float], n_probe: int) -> list:
+    """The ``n_probe`` cells whose centroids rank first by
+    (−cosine to the query, cell) — the one IVF probe ranking."""
+    ranked = sorted(cent_rows, key=lambda cr: (-_cos_py(cr[1], qd), cr[0]))
+    return [c for c, _ in ranked[:n_probe]]
+
+
+def _check_subspaces(m: int, dim: int) -> int:
+    """The PQ subspace width ``dim // m``, rejecting an ``m`` that
+    does not divide ``dim`` before any Spark job."""
+    if m < 1 or dim % m:
+        raise ValueError(
+            f"m must divide dim exactly (got dim={dim}, m={m}): "
+            f"sub = dim // m would silently drop the trailing "
+            f"{dim % m if m >= 1 else dim} dimensions from every "
+            f"code and distance")
+    return dim // m
+
+
 def _adc_expr(codebooks, qd: list[float], sub: int) -> F.Column:
     """The PQ asymmetric-distance expression over code columns
     ``c0..c{m-1}``: per subspace, the query→centroid squared
@@ -231,17 +261,10 @@ def ivf_ann_search(emb: DataFrame, query_vec: list[float], k: int = 5,
     driver; the big scan is pruned to n_probe/|cells| of the data —
     with the cell column as a partition key at write time, that
     pruning is partition pruning."""
-    if n_probe < 1:
-        raise ValueError(
-            f"n_probe must be >= 1, got {n_probe}: probing zero "
-            f"cells returns an empty result that looks like no "
-            f"neighbors exist")
+    _check_n_probe(n_probe)
     cents = ivf_centroids(emb, cell_col, vec_col).collect()
-    ranked = sorted(cents,
-                    key=lambda r: (-_cos_py(r.centroid,
-                                            [float(x) for x in query_vec]),
-                                   r.cell))
-    probe_cells = [r.cell for r in ranked[:n_probe]]
+    probe_cells = _probe_cells(cents, [float(x) for x in query_vec],
+                               n_probe)
     q = V.const_array(query_vec)
     return (emb.filter(F.col(cell_col).isin(probe_cells))
                .select(F.col(id_col), F.col(cell_col).alias("cell"),
@@ -384,16 +407,14 @@ def srp_ann_search(emb: DataFrame, query_vec: list[float], k: int = 5,
 # k-means coarse quantizer (IVF build pass)
 # --------------------------------------------------------------------------
 
-def sqdist(a: F.Column, b: F.Column) -> F.Column:
-    """Σ (aᵢ−bᵢ)² as an ascending-dim left fold in double precision —
-    same accumulation shape as the oracle's chained-term sum, so the
-    argmin assignment below is bit-reproducible across engines."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-                   * (x.cast("double") - y.cast("double"))),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def checkpoint_vecs(emb: DataFrame, vec_col: str = "embedding",
+                     id_col: str = "vec_id") -> DataFrame:
+    """The eagerly checkpointed ``(_id, _v array<double>)`` projection
+    every k-means, PQ and IVF build scans."""
+    return emb.select(
+        F.col(id_col).alias("_id"),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v")
+    ).localCheckpoint(eager=True)
 
 
 def kmeans_seed_query(vecs: DataFrame, n_clusters: int) -> DataFrame:
@@ -424,9 +445,9 @@ def kmeans_centroids(emb: DataFrame, n_clusters: int = 8, n_iter: int = 2,
     iteration is the classic two-step as narrow DataFrame ops:
 
     - **assign**: the centroids are k·dim driver-side constants, so
-      nearest-cell is the shuffle-free map-side expression of
-      :func:`kmeans_assign_expr` — squared-distance argmin with a
-      (distance, cell) tie-break, no join;
+      nearest-cell is the shuffle-free map of :func:`assign_cells` —
+      squared-distance argmin with a (distance, cell) tie-break, no
+      join;
     - **update**: posexplode to (cell, dim, val), per-dim mean — the
       iteration's ONE shuffle — then the k·dim means come back to the
       driver and re-assemble ordered by dim.
@@ -473,37 +494,25 @@ def kmeans_centroid_rows(emb: DataFrame, n_clusters: int = 8,
     """The Lloyd's build of :func:`kmeans_centroids`, returning the
     k·dim-bounded driver-side ``[(cell, centroid)]`` list (cells
     ascending 0..k-1) instead of a DataFrame — the form every
-    assignment/search expression consumes. Same seeding, same
-    iteration arithmetic, bit-identical centroids."""
+    assignment/search consumes. Same seeding, same iteration
+    arithmetic, bit-identical centroids; each iteration assigns
+    through :func:`assign_cells`."""
     if n_clusters < 1:
         raise ValueError(
             f"n_clusters must be >= 1, got {n_clusters}")
     if vecs is None:
         if emb is None:
             raise ValueError("one of emb or vecs is required")
-        vecs = emb.select(
-            F.col(id_col).alias("_id"),
-            F.transform(F.col(vec_col),
-                        lambda x: x.cast("double")).alias("_v")
-        ).localCheckpoint(eager=True)
+        vecs = checkpoint_vecs(emb, vec_col, id_col)
     seed_rows = kmeans_seed_query(vecs, n_clusters).collect()
     seed_rows.sort(key=lambda r: (r._h, r._id))
     cent_rows = [(i, [float(x) for x in r._v])
                  for i, r in enumerate(seed_rows)]
     for _ in range(n_iter):
-        # Assignment is the map-side centroid-literal expression (no
-        # crossJoin, no shuffle) and _v never leaves the row, so one
-        # iteration is exactly ONE shuffle: the (cell, dim) mean.
-        # Past EXPR_ASSIGN_MAX_K cells the packed-broadcast twin
-        # takes over (same fold, same tie-break, O(1) plan size) —
-        # at large k the literal expression's per-compile
-        # analysis/codegen cost would dominate the iteration.
-        if n_clusters <= EXPR_ASSIGN_MAX_K:
-            assigned = vecs.withColumn(
-                "cell", kmeans_assign_expr(cent_rows, vec_col="_v"))
-        else:
-            assigned = with_cell_rows_auto(vecs, cent_rows,
-                                           vec_col="_v")
+        # Assignment is a map (no crossJoin, no shuffle) and _v never
+        # leaves the row, so one iteration is exactly ONE shuffle:
+        # the (cell, dim) mean.
+        assigned = assign_cells(vecs, cent_rows, "_v")
         longf = assigned.select("cell",
                                 F.posexplode("_v").alias("dim", "val"))
         means = (longf.groupBy("cell", "dim")
@@ -523,37 +532,65 @@ def kmeans_centroid_rows(emb: DataFrame, n_clusters: int = 8,
     return cent_rows
 
 
-#: Above this k the inlined centroid-literal expression risks blowing
-#: whole-stage-codegen method limits; fall back to the broadcast-join
-#: formulation. Real IVF quantizers (k ≤ a few thousand cells over
-#: billions of vectors) mostly sit under it.
-MAX_EXPR_CENTROIDS = 256
+#: The one nearest-centroid cutover. Up to this many centroids,
+#: :func:`assign_cells` inlines them as literals (:func:`_assign_expr`):
+#: a pure JVM projection with no Python boundary. Past it the
+#: literals' Catalyst analysis + codegen cost (k·dim literal nodes,
+#: paid per plan compile) outweighs that, and the ``mapInArrow``
+#: kernel (:func:`_assign_arrow`) takes over: its plan is O(1) in k
+#: and its per-row distance arithmetic is vectorized. Interleaved A/B
+#: at sf0.1 (1,999 × 64-dim vectors, 4 cores; CHANGES.md): at k = 8
+#: the fold wins the IVF search and the m-book IVF-PQ assignment; from
+#: k = 12 the kernel's median wins at every site, by 7-14× at k = 256.
+EXPR_ASSIGN_MAX_K = 8
 
 
-def kmeans_assign_expr(cent_rows, vec_col: str = "embedding") -> F.Column:
-    """Nearest-centroid cell as a PURE MAP-SIDE expression: the k
-    collected (cell, centroid) rows are inlined as literals, distance
-    per centroid uses the same ascending-dim :func:`sqdist` fold as
-    the join formulation, and argmin-with-(distance, cell)-tie-break
-    is ``array_min`` over (d, cell) structs — bit-identical to
-    ``min_by(cell, struct(d, cell))``, with zero joins and zero
-    shuffles. This is what assignment over 100 TB of vectors should
-    plan as: a narrow projection, k·dim constants per task.
+def assign_cells(df: DataFrame, cent_rows, vec_col: str,
+                 out_col: str = "cell") -> DataFrame:
+    """``df`` plus ``out_col``: each row's nearest centroid among the
+    driver-side ``[(cell, centroid)]`` rows — squared-distance argmin
+    with a (distance, cell) tie-break, as a map over the scan (no
+    join, no shuffle). Every nearest-centroid site in the package
+    (Lloyd's iterations, IVF search and index writes, SemDeDup, PQ
+    and IVF-PQ codes, residuals) goes through here.
 
-    Built as ONE parsed SQL expression (round 17): the Column-API
-    form spent ~2 s of pure DRIVER time per compile on py4j traffic —
-    each centroid's ``zip_with``/``aggregate`` lambda costs a dozen
-    gateway round-trips, and the k·dim literal elements one each —
-    which made plan construction, not execution, the dominant cost of
-    every centroid-literal search (cProfile: 10.3 s of an 11.9 s
-    ivfpq_residual build inside this function). The string parses in
-    ~5 ms and yields the IDENTICAL expression tree: same ascending-dim
-    left-associative fold as :func:`sqdist` (x and y cast to double,
-    squared difference, ``0.0D`` seed, ``acc + v`` merge), same
-    ``array_min`` over (d, cell) structs, double literals rendered
-    with ``repr`` (shortest round-trip form; Spark's parser is
-    correctly rounded, so values are bit-identical — formulation
-    equality stays pytest-pinned)."""
+    Both formulations give bit-identical cells (pinned in the tests
+    against an independent crossJoin + ``min_by`` reference):
+
+    - distance is the ascending-dim left fold of ``(x − c)²`` in
+      double precision;
+    - ties and NaN follow Spark's struct ordering: the smallest cell
+      among equal distances, NaN after every number;
+    - a degenerate row (NULL vector, NULL element, length ≠ the
+      centroid dim) has only NULL distances and takes the smallest
+      cell.
+
+    Up to :data:`EXPR_ASSIGN_MAX_K` centroids the literal fold runs;
+    past it the Arrow kernel. Ragged centroids (mixed dims, which no
+    builder produces) always take the literal fold: only it
+    reproduces the per-cell NULL distances ``zip_with`` padding
+    gives them."""
+    rows = sorted((int(c), [float(x) for x in v]) for c, v in cent_rows)
+    if not rows:
+        raise ValueError("cent_rows must be non-empty")
+    if (len(rows) <= EXPR_ASSIGN_MAX_K
+            or len({len(v) for _, v in rows}) != 1):
+        return df.withColumn(out_col, _assign_expr(rows, vec_col))
+    return _assign_arrow(df, rows, vec_col, out_col)
+
+
+def _assign_expr(cent_rows, vec_col: str) -> F.Column:
+    """The nearest cell as ONE parsed SQL expression with the
+    centroids inlined as literals: per centroid a ``zip_with`` +
+    ``aggregate`` squared-distance fold (x and y cast to double,
+    ``0.0D`` seed, ``acc + v`` merge), and ``array_min`` over
+    (d, cell) structs for the argmin.
+
+    Parsed from a string, not built through the Column API: the
+    Column form cost ~2 s of driver time per compile in py4j round
+    trips (a dozen per lambda, one per literal element). Doubles are
+    rendered with ``repr`` (shortest round-trip form; Spark's parser
+    rounds correctly), so the literals are bit-exact."""
     def arr(vals):
         return "array(" + ",".join(repr(float(x)) + "D"
                                    for x in vals) + ")"
@@ -563,106 +600,33 @@ def kmeans_assign_expr(cent_rows, vec_col: str = "embedding") -> F.Column:
         "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), 0.0D, "
         "(acc, v) -> acc + v) AS d, CAST(%d AS INT) AS cell)"
         % (vec_col, arr(centroid), int(cell))
-        for cell, centroid in ((r[0], r[1]) for r in cent_rows))
+        for cell, centroid in cent_rows)
     return F.expr(f"array_min(array({pairs})).cell")
 
 
-def kmeans_assign(vecs: DataFrame, cents: DataFrame,
-                  vec_col: str = "embedding",
-                  id_col: str = "vec_id") -> DataFrame:
-    """(id, cell): nearest-centroid assignment, squared-distance
-    argmin with deterministic (distance, cell) tie-break. For k ≤
-    :data:`MAX_EXPR_CENTROIDS` the k-row centroid table is collected
-    (bounded: k·dim values) and assignment runs as the shuffle-free
-    map-side expression; beyond that, the broadcast crossJoin +
-    ``min_by`` aggregation — same results either way
-    (pytest-asserted)."""
-    cent_rows = sorted((r.cell, list(r.centroid)) for r in cents.collect())
-    if len(cent_rows) <= MAX_EXPR_CENTROIDS:
-        return vecs.select(
-            F.col(id_col).alias("_id"),
-            kmeans_assign_expr(cent_rows, vec_col).alias("cell"))
-    return kmeans_assign_shuffle(vecs, cents, vec_col, id_col)
+def _assign_arrow(df: DataFrame, cent_rows, vec_col: str,
+                  out_col: str) -> DataFrame:
+    """The nearest cell as a ``mapInArrow`` NumPy kernel over
+    ``cent_rows`` sorted by cell, all of one dim. It keeps the literal
+    fold's arithmetic and ordering:
 
+    - squared distance accumulates over dims in ASCENDING order, one
+      vectorized ``acc += diff²`` per dim — the same IEEE-double op
+      sequence per (row, centroid) as the fold;
+    - argmin takes the FIRST minimum over the ascending-cell axis,
+      with NaN distances replaced by +inf first (all-NaN rows fall to
+      the first cell, as struct-ordering ties do);
+    - degenerate rows take the smallest cell directly.
 
-def kmeans_assign_shuffle(vecs: DataFrame, cents: DataFrame,
-                          vec_col: str = "embedding",
-                          id_col: str = "vec_id") -> DataFrame:
-    """The broadcast-join assignment formulation — k rows per vector
-    through the ``min_by`` aggregation's shuffle. Only preferable when
-    k is too large to inline as an expression; kept callable so the
-    equivalence with :func:`kmeans_assign_expr` stays pytest-pinned."""
-    d = sqdist(F.col(vec_col), F.col("centroid"))
-    return (vecs.crossJoin(F.broadcast(cents))
-                .withColumn("_d", d)
-                .groupBy(F.col(id_col).alias("_id"))
-                .agg(F.min_by("cell", F.struct("_d", "cell")).alias("cell")))
-
-
-#: Above this k the inlined centroid-literal expression's Catalyst
-#: analysis + codegen cost (k·dim literal nodes, ~3 s at k·dim=2048,
-#: paid PER PLAN COMPILE) outweighs its zero-plan-overhead execution;
-#: switch to the packed-broadcast formulation below, whose plan is a
-#: 1-row BroadcastNestedLoopJoin regardless of k.
-EXPR_ASSIGN_MAX_K = 16
-
-
-#: At or above this centroid count the nearest-cell assignment takes
-#: the Arrow/NumPy kernel (:func:`with_cell_arrow_rows`) instead of
-#: the interpreted higher-order-function fold: per-row work grows
-#: with k·dim while the Python-boundary cost is per row, so the
-#: kernel wins once each row carries enough distance arithmetic
-#: (guide §4.2 — hand whole batches to vectorized native code).
-#: Measured at sf0.1 (2k×64-dim vectors, k=32): packed HOF 0.53 s vs
-#: Arrow 0.32 s for one assignment pass; the gap widens with k. Below
-#: the threshold the HOF form's zero-boundary plan stays preferable.
-ARROW_ASSIGN_MIN_K = 24
-
-
-def with_cell_arrow_rows(df: DataFrame, cent_rows,
-                         vec_col: str = "_v",
-                         out_col: str = "cell") -> DataFrame:
-    """Nearest-centroid assignment as a ``mapInArrow`` NumPy kernel —
-    BIT-IDENTICAL to :func:`with_cell_packed_rows` (equality
-    pytest-pinned, and the sf0.1 oracle audit exercises this path):
-
-    - squared distance accumulates over dims in ASCENDING order via
-      one vectorized ``acc += diff²`` per dim — the same
-      left-associated IEEE-double op sequence per (row, centroid) as
-      the ``sqdist`` fold, so every distance is bit-equal;
-    - argmin takes the FIRST minimum over the ascending-cell axis —
-      exactly ``array_min``'s (d, cell) lexicographic tie-break —
-      with NaN distances substituted by +inf first (Spark orders NaN
-      greater than every number; all-NaN rows fall to the first
-      cell, matching struct-ordering ties);
-    - degenerate rows (NULL vector, NULL element, length ≠ the
-      centroid dim) produce an all-NULL distance column under the
-      HOF fold, and Spark's struct ordering sorts NULL first — the
-      row resolves to the smallest cell id. The kernel applies that
-      rule directly.
-
-    Scale shape: identical to the packed form (no shuffle, no join —
-    a pure map over the scan with k·dim constants per task), plus
-    one Arrow boundary crossing of exactly the input columns. Use
-    past :data:`ARROW_ASSIGN_MIN_K` cells where the interpreted
-    fold's per-element cost dominates; the centroid matrix rides the
-    task closure (k·dim doubles — the same payload the packed form
-    broadcasts)."""
+    The centroid matrix (k·dim doubles) rides the task closure; one
+    Arrow crossing carries the input columns."""
     import numpy as np
 
-    rows = sorted((int(c), [float(x) for x in v]) for c, v in cent_rows)
-    if not rows:
-        raise ValueError("cent_rows must be non-empty")
-    dims = {len(v) for _, v in rows}
-    if len(dims) != 1:
-        # Ragged centroid dims make per-cell NULL distances possible
-        # (zip_with pads the shorter side) — only the HOF fold
-        # reproduces that mixed ordering. Builders never produce
-        # ragged books; keep the slow-but-total form for them.
-        return with_cell_packed_rows(df, cent_rows, vec_col, out_col)
-    dim = dims.pop()
-    cmat = np.array([v for _, v in rows], dtype=np.float64)
-    cells = np.array([c for c, _ in rows], dtype=np.int32)
+    if out_col in df.columns:
+        df = df.drop(out_col)
+    dim = len(cent_rows[0][1])
+    cmat = np.array([v for _, v in cent_rows], dtype=np.float64)
+    cells = np.array([c for c, _ in cent_rows], dtype=np.int32)
     first_cell = int(cells[0])
     names = list(df.columns)
     out_names = names + [out_col]
@@ -722,76 +686,6 @@ def with_cell_arrow_rows(df: DataFrame, cent_rows,
     return df.mapInArrow(_assign, out_schema)
 
 
-def with_cell_rows_auto(df: DataFrame, cent_rows,
-                        vec_col: str = "_v",
-                        out_col: str = "cell") -> DataFrame:
-    """Driver-rows assignment with the k-driven formulation cutover:
-    the Arrow kernel at or past :data:`ARROW_ASSIGN_MIN_K` cells,
-    the packed HOF broadcast below it. One dispatch point so every
-    large-k assignment site (the Lloyd's loop, SemDeDup) picks the
-    measured-fastest form; all three formulations are bit-identical
-    and pinned against each other."""
-    cent_rows = list(cent_rows)
-    if len(cent_rows) >= ARROW_ASSIGN_MIN_K:
-        return with_cell_arrow_rows(df, cent_rows, vec_col, out_col)
-    return with_cell_packed_rows(df, cent_rows, vec_col, out_col)
-
-
-def with_cell_packed_rows(df: DataFrame, cent_rows,
-                          vec_col: str = "_v",
-                          out_col: str = "cell") -> DataFrame:
-    """:func:`with_cell_packed` for centroids that ALREADY live on
-    the driver (a Lloyd's loop between collects, an injected index):
-    the packed 1-row broadcast table is built directly from the
-    (cell, centroid) rows — no ``collect_list`` aggregation job per
-    call, which matters when the build invokes assignment once per
-    iteration. Same argmin expression, same results."""
-    rows = sorted((int(c), [float(x) for x in v]) for c, v in cent_rows)
-    packed = df.sparkSession.createDataFrame(
-        [(rows,)],
-        "_cents array<struct<cell:int,centroid:array<double>>>")
-    return (df.crossJoin(F.broadcast(packed))
-              .withColumn(out_col, F.array_min(F.transform(
-                  "_cents",
-                  lambda c: F.struct(
-                      sqdist(F.col(vec_col),
-                             c.getField("centroid")).alias("d"),
-                      c.getField("cell").alias("cell"))))
-                  .getField("cell"))
-              .drop("_cents"))
-
-
-def with_cell_packed(df: DataFrame, cents: DataFrame,
-                     vec_col: str = "_v",
-                     out_col: str = "cell") -> DataFrame:
-    """Nearest-centroid assignment with the centroid table carried as
-    DATA, not expression nodes: the k (cell, centroid) rows collapse
-    into ONE packed array row that is broadcast and cross-joined
-    (1-row BroadcastNestedLoopJoin — no shuffle, no per-vector row
-    blowup), and the argmin is ``array_min`` over
-    (sqdist, cell) structs built by ``transform`` — the SAME
-    ascending-dim fold and (distance, cell) tie-break as
-    :func:`kmeans_assign_expr`, so the three formulations are
-    interchangeable (equality pytest-pinned). Unlike the literal
-    expression, plan size is O(1) in k: this is the formulation for
-    k past :data:`EXPR_ASSIGN_MAX_K`, where inlining k·dim literals
-    makes every plan compile pay seconds of analysis/codegen.
-    All other columns of ``df`` pass through unchanged."""
-    packed = cents.agg(
-        F.sort_array(F.collect_list(F.struct(
-            F.col("cell").cast("int").alias("cell"),
-            F.col("centroid").alias("centroid")))).alias("_cents"))
-    return (df.crossJoin(F.broadcast(packed))
-              .withColumn(out_col, F.array_min(F.transform(
-                  "_cents",
-                  lambda c: F.struct(
-                      sqdist(F.col(vec_col),
-                             c.getField("centroid")).alias("d"),
-                      c.getField("cell").alias("cell"))))
-                  .getField("cell"))
-              .drop("_cents"))
-
-
 def ivf_kmeans_search(emb: DataFrame, query_vec: list[float], k: int = 5,
                       n_probe: int = 2, n_clusters: int = 8,
                       n_iter: int = 2, vec_col: str = "embedding",
@@ -813,15 +707,8 @@ def ivf_kmeans_search(emb: DataFrame, query_vec: list[float], k: int = 5,
     index per call is a benchmark artifact, not a serving path.
     Reuse ≡ inline-build is pytest-pinned via a parquet round-trip
     of the centroid table."""
-    if n_probe < 1:
-        raise ValueError(
-            f"n_probe must be >= 1, got {n_probe}: probing zero "
-            f"cells returns an empty result that looks like no "
-            f"neighbors exist")
-    vecs = emb.select(
-        F.col(id_col).alias("_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v")
-    ).localCheckpoint(eager=True)
+    _check_n_probe(n_probe)
+    vecs = checkpoint_vecs(emb, vec_col, id_col)
     if cents_df is None:
         # Rows form directly — no createDataFrame+collect round-trip
         # of driver-held data (one Python-backed task per row).
@@ -831,35 +718,18 @@ def ivf_kmeans_search(emb: DataFrame, query_vec: list[float], k: int = 5,
         cents = [(r.cell, list(r.centroid))
                  for r in cents_df.collect()]
     qd = [float(x) for x in query_vec]
-    ranked = sorted(cents,
-                    key=lambda cr: (-_cos_py(cr[1], qd), cr[0]))
-    probe_cells = [c for c, _ in ranked[:n_probe]]
+    probe_cells = _probe_cells(cents, qd, n_probe)
 
     # Map-side assignment keeps _v on the row, so the probe is
     # scan → filter → cosine → TakeOrderedAndProject: no join at all.
-    cent_rows = sorted(cents)
     q = V.const_array(qd)
-    return (vecs.withColumn("cell", kmeans_assign_expr(cent_rows, "_v"))
+    return (assign_cells(vecs, cents, "_v")
             .filter(F.col("cell").isin(probe_cells))
             .select(F.col("_id").alias(id_col), "cell",
                     F.round(V.cosine(F.col("_v"), q),
                             round_digits).alias("cosine"))
             .orderBy(F.desc("cosine"), id_col)
             .limit(k))
-
-
-def _assign_cells(emb: DataFrame, cent_rows,
-                  vec_col: str = "embedding",
-                  out_col: str = "cell") -> DataFrame:
-    """Map-side nearest-centroid assignment under a FROZEN quantizer,
-    picking the plan-size-appropriate formulation: inlined literal
-    expression up to :data:`EXPR_ASSIGN_MAX_K` cells, packed 1-row
-    broadcast past it. ``cent_rows`` is the driver-side
-    [(cell, centroid)] list both formulations consume."""
-    if len(cent_rows) <= EXPR_ASSIGN_MAX_K:
-        return emb.withColumn(out_col,
-                              kmeans_assign_expr(cent_rows, vec_col))
-    return with_cell_rows_auto(emb, cent_rows, vec_col, out_col)
 
 
 def ivf_index_write(emb: DataFrame, cents_df: DataFrame, path: str,
@@ -882,7 +752,7 @@ def ivf_index_write(emb: DataFrame, cents_df: DataFrame, path: str,
     (picoprobe/flows.py transfer step)."""
     cent_rows = sorted((int(r.cell), list(r.centroid))
                        for r in cents_df.collect())
-    assigned = _assign_cells(emb, cent_rows, vec_col)
+    assigned = assign_cells(emb, cent_rows, vec_col)
     (assigned.select(id_col, vec_col, "cell")
              .write.partitionBy("cell").mode(mode).parquet(path))
     return cent_rows
@@ -901,7 +771,7 @@ def ivf_index_append(new_emb: DataFrame, cent_rows, path: str,
     build-on-union is pytest-pinned; centroids drifting away from the
     data distribution are a REBUILD decision, made by re-running
     :func:`kmeans_centroids`, not silently inside the append."""
-    assigned = _assign_cells(new_emb, cent_rows, vec_col)
+    assigned = assign_cells(new_emb, cent_rows, vec_col)
     (assigned.select(id_col, vec_col, "cell")
              .write.partitionBy("cell").mode("append").parquet(path))
 
@@ -914,22 +784,16 @@ def ivf_index_search(index: DataFrame, cent_rows,
                      round_digits: int = 6) -> DataFrame:
     """Serve a query from the PERSISTED layout: rank the k-row
     driver-side centroid list by centroid·query cosine (same ranking
-    as :func:`ivf_kmeans_search` — shared `_cos_py`, same
-    (−cos, cell) tie-break), restrict the scan to the ``n_probe``
+    as :func:`ivf_kmeans_search` — the shared :func:`_probe_cells`
+    (−cos, cell) order), restrict the scan to the ``n_probe``
     nearest cells — partition pruning against the
     ``partitionBy(cell)`` parquet — and exact-cosine top-k inside.
     The serving plan is scan → filter → cosine →
     TakeOrderedAndProject: no Lloyd's build, no assignment, no
     join."""
-    if n_probe < 1:
-        raise ValueError(
-            f"n_probe must be >= 1, got {n_probe}: probing zero "
-            f"cells returns an empty result that looks like no "
-            f"neighbors exist")
+    _check_n_probe(n_probe)
     qd = [float(x) for x in query_vec]
-    ranked = sorted(cent_rows,
-                    key=lambda cr: (-_cos_py(cr[1], qd), cr[0]))
-    probe_cells = [c for c, _ in ranked[:n_probe]]
+    probe_cells = _probe_cells(cent_rows, qd, n_probe)
     q = V.const_array(qd)
     return (index.filter(F.col("cell").isin(probe_cells))
                  .select(F.col(id_col), "cell",
@@ -971,11 +835,7 @@ def semdedup_centroid_rows(emb: DataFrame, n_iter: int = 2,
     :func:`semantic_dedup` consumes via ``cent_rows`` and what a
     serving deployment caches per corpus snapshot."""
     if vecs is None:
-        vecs = emb.select(
-            F.col(id_col).alias("_id"),
-            F.transform(F.col(vec_col),
-                        lambda x: x.cast("double")).alias("_v")
-        ).localCheckpoint(eager=True)
+        vecs = checkpoint_vecs(emb, vec_col, id_col)
     if n_clusters is None:
         n_clusters = semdedup_auto_k(vecs.count(), target_cell_pop)
     # Rows form directly (round 17): the previous
@@ -1015,20 +875,15 @@ def semantic_dedup(emb: DataFrame, n_clusters: int | None = None,
 
     Scale shape: the build is the sampled-corpus k-means pass
     (:func:`kmeans_centroids` — one (cell, dim) aggregate per
-    iteration); assignment is the shuffle-free map-side expression
-    (switching to the packed-broadcast formulation
-    :func:`with_cell_packed` past :data:`EXPR_ASSIGN_MAX_K` cells,
-    where inlined literals would dominate plan compile); the only
-    quadratic work is
+    iteration); assignment is the shuffle-free map of
+    :func:`assign_cells` (the Arrow kernel once auto-k passes
+    :data:`EXPR_ASSIGN_MAX_K` cells); the only quadratic work is
     the within-cell self-join, which is the SemDeDup trick — with the
     learned cell as a partition key the join is partition-local, and
     under auto-k cell population is ~target_cell_pop, never corpus/k
     of a growing corpus. The neighbor aggregate is one hash shuffle
     keyed by the high-cardinality vector id."""
-    vecs = emb.select(
-        F.col(id_col).alias("_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v")
-    ).localCheckpoint(eager=True)
+    vecs = checkpoint_vecs(emb, vec_col, id_col)
     # ``cent_rows`` (round 13): a prebuilt [(cell, centroid)] list —
     # the k·dim-bounded index a deployment trains ONCE and serves to
     # every dedup pass (the amortization the quantized-ANN suite
@@ -1043,12 +898,7 @@ def semantic_dedup(emb: DataFrame, n_clusters: int | None = None,
         cent_rows = semdedup_centroid_rows(
             emb, n_iter, vec_col, id_col, target_cell_pop,
             n_clusters=n_clusters, vecs=vecs)
-    n_clusters = len(cent_rows)
-    if n_clusters <= EXPR_ASSIGN_MAX_K:
-        assigned = vecs.withColumn("cell",
-                                   kmeans_assign_expr(cent_rows, "_v"))
-    else:
-        assigned = with_cell_rows_auto(vecs, cent_rows, vec_col="_v")
+    assigned = assign_cells(vecs, cent_rows, "_v")
 
     # The assignment output feeds THREE consumers (both self-join
     # sides and the final verdict join) and Spark plans them as
@@ -1091,6 +941,18 @@ def semantic_dedup(emb: DataFrame, n_clusters: int | None = None,
                      .alias("keep")))
 
 
+def _with_codes(df: DataFrame, codebooks, vec_col: str,
+                sub: int) -> DataFrame:
+    """``df`` plus code columns ``c0..c{m-1}``: subspace i's code is
+    the nearest centroid of ``codebooks[i]`` to the i-th ``sub``-wide
+    slice of ``vec_col``."""
+    for i, book in enumerate(codebooks):
+        df = assign_cells(
+            df.withColumn("_sl", F.slice(vec_col, i * sub + 1, sub)),
+            book, "_sl", f"c{i}").drop("_sl")
+    return df
+
+
 def pq_encode(emb: DataFrame, m: int = 4, n_codes: int = 8,
               n_iter: int = 2, dim: int = 64,
               vec_col: str = "embedding", id_col: str = "vec_id",
@@ -1108,29 +970,19 @@ def pq_encode(emb: DataFrame, m: int = 4, n_codes: int = 8,
     k-row centroid-table argument).
 
     Scale shape: the m builds run JOINTLY — per Lloyd iteration, all
-    m subspace assignments are map-side centroid-literal expressions
-    over one scan, and all m codebooks update through ONE
+    m subspace assignments are :func:`assign_cells` maps over one
+    scan, and all m codebooks update through ONE
     (subspace, cell, dim) mean aggregate (m·k·(dim/m) = k·dim output
     rows — driver-bounded like any centroid table). So the whole
     build costs ``n_iter`` corpus aggregates + one seed top-k,
     independent of m — not m separate build passes. Encoding is m
-    map-side expressions over one scan — no joins, no shuffles, the
+    map-side assignments over one scan — no joins, no shuffles, the
     narrow projection a 100 TB encode pass must be. Per-subspace
     means equal the independent-build means exactly (same value
     multisets per (subspace, cell, dim) group)."""
-    if m < 1 or dim % m:
-        raise ValueError(
-            f"m must divide dim exactly (got dim={dim}, m={m}): "
-            f"sub = dim // m would silently drop the trailing "
-            f"{dim % m if m >= 1 else dim} dimensions from every "
-            f"code and distance")
-    sub = dim // m
+    sub = _check_subspaces(m, dim)
     if vecs is None:
-        vecs = emb.select(
-            F.col(id_col).alias("_id"),
-            F.transform(F.col(vec_col),
-                        lambda x: x.cast("double")).alias("_v")
-        ).localCheckpoint(eager=True)
+        vecs = checkpoint_vecs(emb, vec_col, id_col)
     # One seed top-k for all subspaces: the md5(_id) rank picks the
     # SAME seed vectors in every subspace (the oracle's per-subspace
     # row_number over identical ids), so slicing the k full seed
@@ -1142,17 +994,8 @@ def pq_encode(emb: DataFrame, m: int = 4, n_codes: int = 8,
          for c, r in enumerate(seed_rows)]
         for i in range(m)]
 
-    def with_codes(df):
-        for i in range(m):
-            df = (df
-                  .withColumn("_sl", F.slice("_v", i * sub + 1, sub))
-                  .withColumn(f"c{i}",
-                              kmeans_assign_expr(codebooks[i], "_sl"))
-                  .drop("_sl"))
-        return df
-
     for _ in range(n_iter):
-        assigned = with_codes(vecs)
+        assigned = _with_codes(vecs, codebooks, "_v", sub)
         cell = F.element_at(
             F.array(*[F.col(f"c{i}") for i in range(m)]),
             (F.floor(F.col("_p") / sub) + 1).cast("int"))
@@ -1174,7 +1017,7 @@ def pq_encode(emb: DataFrame, m: int = 4, n_codes: int = 8,
               if (i, c) in by_key else cent)
              for c, cent in codebooks[i]]
             for i in range(m)]
-    out = with_codes(vecs)
+    out = _with_codes(vecs, codebooks, "_v", sub)
     return out.select("_id", *[f"c{i}" for i in range(m)]), codebooks
 
 
@@ -1204,18 +1047,12 @@ def pq_adc_search(emb: DataFrame, query_vec: list[float], k: int = 10,
     TakeOrderedAndProject. No join, no shuffle, no window; the fat
     vector column never enters the search plan at all — the whole
     point of PQ at 100 TB."""
+    sub = _check_subspaces(m, dim)
     if prebuilt is not None:
         codes, codebooks = prebuilt
     else:
         codes, codebooks = pq_encode(emb, m, n_codes, n_iter, dim,
                                      vec_col, id_col)
-    if m < 1 or dim % m:
-        raise ValueError(
-            f"m must divide dim exactly (got dim={dim}, m={m}): "
-            f"sub = dim // m would silently drop the trailing "
-            f"{dim % m if m >= 1 else dim} dimensions from every "
-            f"code and distance")
-    sub = dim // m
     qd = [float(x) for x in query_vec]
     adc = _adc_expr(codebooks, qd, sub)
     return (codes
@@ -1258,8 +1095,8 @@ def ivfpq_search(emb: DataFrame, query_vec: list[float], k: int = 10,
     round-7 recall table).
 
     The FIVE builds (coarse + m subspaces) run jointly: per Lloyd
-    iteration, every assignment is a map-side centroid-literal
-    expression over one scan, and ALL codebooks update through a
+    iteration, every assignment is an :func:`assign_cells` map over
+    one scan, and ALL codebooks update through a
     single (builder, cell, dim) mean aggregate — one corpus pass per
     iteration, independent of m, over one checkpointed (_id, _v)
     projection. Per-(builder, cell, dim) value multisets equal the
@@ -1279,19 +1116,8 @@ def ivfpq_search(emb: DataFrame, query_vec: list[float], k: int = 10,
     updates and vice versa — per-(builder, cell, dim) mean multisets
     coincide), so injection cannot change results
     (pytest-pinned)."""
-    if vecs is None:
-        vecs = emb.select(
-            F.col(id_col).alias("_id"),
-            F.transform(F.col(vec_col),
-                        lambda x: x.cast("double")).alias("_v")
-        ).localCheckpoint(eager=True)
-    if m < 1 or dim % m:
-        raise ValueError(
-            f"m must divide dim exactly (got dim={dim}, m={m}): "
-            f"sub = dim // m would silently drop the trailing "
-            f"{dim % m if m >= 1 else dim} dimensions from every "
-            f"code and distance")
-    sub = dim // m
+    _check_n_probe(n_probe)
+    sub = _check_subspaces(m, dim)
     if (coarse_rows is None) != (codebooks is None):
         # Partial injection would silently discard the provided
         # quantizer and re-seed BOTH from scratch — results could
@@ -1300,6 +1126,8 @@ def ivfpq_search(emb: DataFrame, query_vec: list[float], k: int = 10,
             "ivfpq_search: provide BOTH coarse_rows and codebooks "
             "(injected index) or NEITHER (fresh build) — got exactly "
             "one.")
+    if vecs is None:
+        vecs = checkpoint_vecs(emb, vec_col, id_col)
     build_needed = coarse_rows is None or codebooks is None
     if build_needed:
         # One seed top-k serves every builder (md5(_id) rank is
@@ -1316,29 +1144,8 @@ def ivfpq_search(emb: DataFrame, query_vec: list[float], k: int = 10,
             for i in range(m)]
 
     def assigned_df():
-        # Past EXPR_ASSIGN_MAX_K cells/codes, the packed-broadcast
-        # assignment replaces the literal expressions (same fold,
-        # same tie-break, equality pytest-pinned): at e.g. 64 cells
-        # × 64 dims the inlined-literal plan costs seconds of
-        # analysis/codegen PER COMPILE, and this closure compiles
-        # per Lloyd iteration plus once for the search.
-        if max(n_cells, n_codes) <= EXPR_ASSIGN_MAX_K:
-            df = vecs.withColumn("cell",
-                                 kmeans_assign_expr(coarse_rows, "_v"))
-            for i in range(m):
-                df = (df.withColumn("_sl",
-                                    F.slice("_v", i * sub + 1, sub))
-                      .withColumn(f"c{i}",
-                                  kmeans_assign_expr(codebooks[i],
-                                                     "_sl"))
-                      .drop("_sl"))
-            return df
-        df = with_cell_packed_rows(vecs, coarse_rows, "_v")
-        for i in range(m):
-            df = (with_cell_packed_rows(
-                df.withColumn("_sl", F.slice("_v", i * sub + 1, sub)),
-                codebooks[i], "_sl", out_col=f"c{i}").drop("_sl"))
-        return df
+        return _with_codes(assign_cells(vecs, coarse_rows, "_v"),
+                           codebooks, "_v", sub)
 
     for _ in range(n_iter if build_needed else 0):
         ex = assigned_df().select(
@@ -1370,14 +1177,15 @@ def ivfpq_search(emb: DataFrame, query_vec: list[float], k: int = 10,
             for i in range(m)]
 
     qd = [float(x) for x in query_vec]
-    ranked = sorted(coarse_rows,
-                    key=lambda r: (-_cos_py(r[1], qd), r[0]))
-    probe_cells = [c for c, _ in ranked[:n_probe]]
+    probe_cells = _probe_cells(coarse_rows, qd, n_probe)
 
-    df = assigned_df()
+    # codes only for rows in the probed cells: the filter cannot pass
+    # below a book's mapInArrow, so it goes between the two passes
+    df = _with_codes(assign_cells(vecs, coarse_rows, "_v")
+                     .filter(F.col("cell").isin(probe_cells)),
+                     codebooks, "_v", sub)
     adc = _adc_expr(codebooks, qd, sub)
-    ranked = (df.filter(F.col("cell").isin(probe_cells))
-              .withColumn("adc", F.round(adc, round_digits))
+    ranked = (df.withColumn("adc", F.round(adc, round_digits))
               .select(F.col("_id").alias(id_col), "cell",
                       *[f"c{i}" for i in range(m)], "adc")
               .orderBy(F.asc("adc"), F.asc(id_col)))
@@ -1441,15 +1249,14 @@ def batch_topk_cosine(queries: DataFrame, corpus: DataFrame,
 def with_residual(df: DataFrame, coarse_rows: list) -> DataFrame:
     """Append (cell, _r = _v − coarse_centroid(cell)) to a ``(_id,
     _v)`` projection — the IVF residual stream as a PURE MAP: the
-    map-side cell expression selects one of the k centroid literals
+    :func:`assign_cells` cell selects one of the k centroid literals
     and ``zip_with`` subtracts it, zero joins/shuffles. Shared by the
     residual search and the quantized-suite shared build."""
     cents_arr = F.array(*[
         V.const_array(cent)
         for _c, cent in coarse_rows])         # ordered by cell 0..k-1
-    cell = kmeans_assign_expr(coarse_rows, "_v")
     cent = F.element_at(cents_arr, F.col("cell") + 1)
-    return (df.withColumn("cell", cell)
+    return (assign_cells(df, coarse_rows, "_v")
             .withColumn("_r", F.zip_with("_v", cent,
                                          lambda a, b: a - b)))
 
@@ -1490,12 +1297,10 @@ def ivfpq_residual_search(emb: DataFrame, query_vec: list[float],
     stage as :func:`ivfpq_search`: ADC keeps a ``rerank``-deep
     shortlist whose true vectors are re-scored with exact cosine via
     one broadcast id-join, returning (id, cosine) top-k."""
+    _check_n_probe(n_probe)
+    sub = _check_subspaces(m, dim)
     if vecs is None:
-        vecs = emb.select(
-            F.col(id_col).alias("_id"),
-            F.transform(F.col(vec_col),
-                        lambda x: x.cast("double")).alias("_v")
-        ).localCheckpoint(eager=True)
+        vecs = checkpoint_vecs(emb, vec_col, id_col)
     if coarse_rows is None:
         coarse_rows = sorted(kmeans_centroid_rows(
             None, n_cells, n_iter, vecs=vecs))
@@ -1509,25 +1314,13 @@ def ivfpq_residual_search(emb: DataFrame, query_vec: list[float],
         codebooks = res_codebooks
 
     qd = [float(x) for x in query_vec]
-    ranked = sorted(coarse_rows,
-                    key=lambda r: (-_cos_py(r[1], qd), r[0]))
-    probe_cells = [c for c, _ in ranked[:n_probe]]
+    probe_cells = _probe_cells(coarse_rows, qd, n_probe)
     coarse_by_cell = dict(coarse_rows)
-    if m < 1 or dim % m:
-        raise ValueError(
-            f"m must divide dim exactly (got dim={dim}, m={m}): "
-            f"sub = dim // m would silently drop the trailing "
-            f"{dim % m if m >= 1 else dim} dimensions from every "
-            f"code and distance")
-    sub = dim // m
 
-    # codes over the residual stream, cell kept on the row
-    df = with_residual(vecs, coarse_rows)
-    for i in range(m):
-        df = (df.withColumn("_sl", F.slice("_r", i * sub + 1, sub))
-              .withColumn(f"c{i}",
-                          kmeans_assign_expr(codebooks[i], "_sl"))
-              .drop("_sl"))
+    # codes over the residual stream of the probed cells only
+    df = _with_codes(with_residual(vecs, coarse_rows)
+                     .filter(F.col("cell").isin(probe_cells)),
+                     codebooks, "_r", sub)
 
     # per-probed-cell ADC: query residual differs per cell, so each
     # subspace term dispatches on the row's cell over n_probe tables.
@@ -1548,8 +1341,7 @@ def ivfpq_residual_search(emb: DataFrame, query_vec: list[float],
             term = (F.when(F.col("cell") == cell, hit) if term is None
                     else term.when(F.col("cell") == cell, hit))
         adc = term if adc is None else adc + term
-    ranked_df = (df.filter(F.col("cell").isin(probe_cells))
-                 .withColumn("adc", F.round(adc, round_digits))
+    ranked_df = (df.withColumn("adc", F.round(adc, round_digits))
                  .select(F.col("_id").alias(id_col), "cell",
                          *[f"c{i}" for i in range(m)], "adc")
                  .orderBy(F.asc("adc"), F.asc(id_col)))

@@ -1996,11 +1996,7 @@ def _build_quantizers(spark: SparkSession, sf_dir: str) -> tuple:
     emb = tbl(spark, sf_dir, "embeddings", scan_repart=True)
     qvec = [float(x) for x in
             emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]]
-    vecs = (emb.filter(F.col("vec_id") > 0)
-            .select(F.col("vec_id").alias("_id"),
-                    F.transform(F.col("embedding"),
-                                lambda x: x.cast("double")).alias("_v"))
-            .localCheckpoint(eager=True))
+    vecs = SIM.checkpoint_vecs(emb.filter(F.col("vec_id") > 0))
     codes, raw_books = SIM.pq_encode(None, _PQ_M, _PQ_CODES, _PQ_ITER,
                                      vecs=vecs)
     coarse_rows = sorted(SIM.kmeans_centroid_rows(

@@ -4,9 +4,9 @@ time — the continuous form of
 :func:`..operators.similarity.ivf_index_append`.
 
 Shape: ``foreachBatch`` over a FROZEN quantizer (the k-row
-``cent_rows`` list every assignment formulation consumes). Each epoch
-assigns only its own batch map-side — no shuffle, no read of the
-accumulated index — and writes ``partitionBy(epoch, cell)`` with
+``cent_rows`` list). Each epoch assigns only its own batch with
+:func:`..operators.similarity.assign_cells` — a map, no shuffle, no
+read of the accumulated index — and writes ``partitionBy(epoch, cell)`` with
 DYNAMIC partition overwrite, so a replayed epoch (failure recovery)
 overwrites its own partitions instead of double-appending: the same
 exactly-once rule as the streaming dedup loop's state tables. Serving
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from picoprobedataflow_spark.operators.similarity import _assign_cells
+from picoprobedataflow_spark.operators.similarity import assign_cells
 from picoprobedataflow_spark.streaming import loop
 
 
@@ -88,7 +88,7 @@ def run_ivf_index_stream(vec_stream: DataFrame, cent_rows,
     def _process(batch: DataFrame, epoch_id: int) -> None:
         if not batch.head(1):
             return
-        assigned = _assign_cells(batch, cent_rows, vec_col)
+        assigned = assign_cells(batch, cent_rows, vec_col)
         (assigned.select(id_col, vec_col, "cell")
                  .withColumn("epoch", F.lit(epoch_id))
                  .write.mode("overwrite")

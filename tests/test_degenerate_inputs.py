@@ -16,6 +16,8 @@ similarity consumer (functions/vectors.py — now try_divide / guarded).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,6 +25,8 @@ from picoprobedataflow_spark.functions import text as TX
 from picoprobedataflow_spark.functions import vectors as V
 from picoprobedataflow_spark.operators import dedup as DD
 from picoprobedataflow_spark.operators import similarity as SIM
+
+from .assign_reference import cell_pairs, nearest_cell_reference
 
 DEGENERATE_TEXTS = [
     (0, ""), (1, "a"), (2, None), (3, "   "), (4, "!!! ???"),
@@ -100,15 +104,22 @@ def test_kmeans_total_on_duplicates_and_zero_vectors(spark, degen_emb):
     """k exceeding the number of DISTINCT points forces empty cells
     (duplicate seeds attract everything to one of them); the
     keep-previous-centroid rule must keep k stable, and the dead
-    vector must assign somewhere (sqdist is total)."""
+    vector must assign somewhere (the distance fold is total) — on
+    both sides of the assignment cutover, where the centroid list
+    repeats the build's cells (exact ties), equal to the reference."""
     dup = degen_emb.union(degen_emb.withColumn(
         "vec_id", F.col("vec_id") + 100))
     cents = SIM.kmeans_centroids(dup, n_clusters=5, n_iter=2)
     assert cents.count() == 5
-    assigned = SIM.kmeans_assign(
-        dup, cents, vec_col="embedding", id_col="vec_id")
-    assert assigned.filter(F.col("cell").isNull()).count() == 0
-    assert assigned.count() == dup.count()
+    cent_rows = sorted((r.cell, list(r.centroid)) for r in cents.collect())
+    repeated = [(i, cent_rows[i % 5][1])
+                for i in range(SIM.EXPR_ASSIGN_MAX_K + 1)]
+    for rows in (cent_rows, repeated):
+        got = cell_pairs(SIM.assign_cells(dup, rows, "embedding"), "vec_id")
+        assert got == cell_pairs(nearest_cell_reference(
+            dup, rows, "embedding", "vec_id"))
+        assert all(c is not None for _, c in got)
+        assert len(got) == 10      # five vectors, each under two ids
 
 
 # ------------------------------------------------------------------ dedup
@@ -987,12 +998,31 @@ def test_cms_estimate_empty_terms_list(spark, tmp_path):
     assert out.collect() == []
 
 
+@contextmanager
+def _runs_no_spark_job(spark, group):
+    """Assert the block starts no Spark job: it runs under job group
+    ``group``, and the caller's job group is restored after."""
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        yield
+        assert not sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        if outer is None:
+            sc._jsc.clearJobGroup()
+        else:
+            sc.setJobGroup(outer, outer)
+
+
 def test_pq_rejects_non_dividing_subspace_count(spark):
     """Round-17 battery live find: every PQ entry point computed
     ``sub = dim // m`` with no divisibility guard, so m∤dim
     SILENTLY dropped the trailing dim%m dimensions from every code,
     distance and codebook — plausible-looking wrong neighbors. All
-    four surfaces now reject loudly; m | dim still works."""
+    four surfaces now reject loudly, before any Spark job — also the
+    IVF-PQ entries with an injected index, which used to checkpoint
+    and build first; m | dim still works."""
     from picoprobedataflow_spark.operators.similarity import (
         ivfpq_residual_search, ivfpq_search, pq_adc_search,
         pq_encode)
@@ -1002,14 +1032,23 @@ def test_pq_rejects_non_dividing_subspace_count(spark):
          for i in range(6)],
         "vec_id long, embedding array<double>")
     q = [0.0] * 8
-    for call in (
-            lambda: pq_encode(emb, m=3, dim=8),
-            lambda: pq_adc_search(emb, q, m=3, dim=8),
-            lambda: ivfpq_search(emb, q, m=3, dim=8),
-            lambda: ivfpq_residual_search(emb, q, m=3, dim=8),
-            lambda: pq_encode(emb, m=0, dim=8)):
-        with pytest.raises(ValueError, match="divide"):
-            call()
+    coarse = [(0, [0.0] * 8), (1, [1.0] * 8)]
+    books = [[(0, [0.0] * 3), (1, [1.0] * 3)]] * 3
+    with _runs_no_spark_job(spark, "pq-subspace-guard"):
+        for call in (
+                lambda: pq_encode(emb, m=3, dim=8),
+                lambda: pq_adc_search(emb, q, m=3, dim=8),
+                lambda: ivfpq_search(emb, q, m=3, dim=8),
+                lambda: ivfpq_search(emb, q, m=3, dim=8,
+                                     coarse_rows=coarse,
+                                     codebooks=books),
+                lambda: ivfpq_residual_search(emb, q, m=3, dim=8),
+                lambda: ivfpq_residual_search(emb, q, m=3, dim=8,
+                                              coarse_rows=coarse,
+                                              res_codebooks=books),
+                lambda: pq_encode(emb, m=0, dim=8)):
+            with pytest.raises(ValueError, match="divide"):
+                call()
     # the dividing configuration still encodes
     codes, books = pq_encode(emb, m=2, n_codes=2, dim=8)
     assert codes.count() == 6 and len(books) == 2
@@ -1102,11 +1141,12 @@ def test_ivf_probe_and_cdc_bucket_guards(spark):
     """Round-17 battery, third sweep: n_probe=0 returned an EMPTY
     neighbor list that looks exactly like 'no neighbors exist'
     (silent for a typo'd config), and cdc n_buckets=0 died in an
-    executor-level modulo crash — all IVF search surfaces and the
-    CDC bucketizer now reject eagerly; the minimum legal values
-    still run."""
+    executor-level modulo crash — all IVF search surfaces (the
+    IVF-PQ entries included, before any Spark job) and the CDC
+    bucketizer now reject eagerly; the minimum legal values still
+    run."""
     from picoprobedataflow_spark.operators.similarity import (
-        ivf_kmeans_search)
+        ivf_kmeans_search, ivfpq_residual_search, ivfpq_search)
 
     emb = spark.createDataFrame(
         [(i, [float(i % 3), 1.0, 0.5, 0.0]) for i in range(8)],
@@ -1117,6 +1157,11 @@ def test_ivf_probe_and_cdc_bucket_guards(spark):
     q = [1.0, 0.0, 0.0, 0.0]
     with pytest.raises(ValueError, match="n_probe"):
         ivf_kmeans_search(emb, q, k=2, n_probe=0, n_clusters=2)
+    with _runs_no_spark_job(spark, "ivfpq-probe-guard"):
+        for search in (ivfpq_search, ivfpq_residual_search):
+            with pytest.raises(ValueError, match="n_probe"):
+                search(emb, q, k=2, n_cells=2, n_probe=0, m=2,
+                       n_codes=2, dim=4)
     with pytest.raises(ValueError, match="n_buckets"):
         DD.cdc_chunk_dedup(docs, n_buckets=0)
     assert ivf_kmeans_search(emb, q, k=2, n_probe=1,

@@ -254,8 +254,7 @@ def test_ivf_cells_partition_prune_the_probe(spark, tmp_path):
     cents = SIM.kmeans_centroids(emb, n_clusters=8, n_iter=2)
     cent_rows = sorted((r.cell, list(r.centroid))
                        for r in cents.collect())
-    assigned = emb.withColumn(
-        "cell", SIM.kmeans_assign_expr(cent_rows, "embedding"))
+    assigned = SIM.assign_cells(emb, cent_rows, "embedding")
     out = str(tmp_path / "ivf_cells")
     assigned.write.partitionBy("cell").parquet(out)
     probe = spark.read.parquet(out).filter(F.col("cell").isin([1, 3]))

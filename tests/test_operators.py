@@ -17,6 +17,8 @@ from picoprobedataflow_spark.plans import pipeline as PL
 from picoprobedataflow_spark.operators import dedup as DD
 from picoprobedataflow_spark.operators import similarity as SIM
 
+from .assign_reference import cell_pairs, nearest_cell_reference
+
 
 def _docs(spark, texts):
     return spark.createDataFrame(
@@ -883,12 +885,13 @@ def test_kmeans_recovers_separated_clusters(spark):
     generating label exactly (no gold label used in the build)."""
     emb = _toy_embeddings(spark)
     cents = SIM.kmeans_centroids(emb, n_clusters=3, n_iter=2)
+    cent_rows = [(r.cell, list(r.centroid)) for r in cents.collect()]
     vecs = emb.select(
         F.col("vec_id").alias("_id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("_v"))
-    assigned = {r._id: r.cell
-                for r in SIM.kmeans_assign(vecs, cents, vec_col="_v",
-                                           id_col="_id").collect()}
+    got = cell_pairs(SIM.assign_cells(vecs, cent_rows, "_v"))
+    assert got == cell_pairs(nearest_cell_reference(vecs, cent_rows))
+    assigned = dict(got)
     by_label = {}
     for r in emb.select("vec_id", "label").collect():
         by_label.setdefault(r.label, set()).add(assigned[r.vec_id])
@@ -1622,6 +1625,14 @@ def test_ivfpq_production_config_recall(spark):
              for r in SIM.topk_cosine(corpus, qv, k=10).collect()}
     got = SIM.ivfpq_search(corpus, qv, k=10, n_cells=64, n_probe=16,
                            m=8, n_codes=256, rerank=50)
+    # the probe filter sits between the coarse pass and the m book
+    # passes, so codes are computed only for rows in probed cells
+    lines = got._jdf.queryExecution().executedPlan().toString() \
+        .splitlines()
+    filt = next(i for i, ln in enumerate(lines)
+                if "Filter" in ln and "cell#" in ln)
+    assert sum("MapInArrow" in ln for ln in lines[:filt]) == 8
+    assert sum("MapInArrow" in ln for ln in lines[filt:]) == 1
     rows = got.collect()
     assert len(rows) == 10
     recall = len({r.vec_id for r in rows} & brute) / 10
@@ -2620,7 +2631,7 @@ def test_ivf_index_append_equals_rebuild_and_prunes(spark, tmp_path):
     # Append touched only the batch's own cells.
     batch_cells = {
         r.cell
-        for r in SIM._assign_cells(batch, cent_rows, "embedding")
+        for r in SIM.assign_cells(batch, cent_rows, "embedding")
         .select("cell").distinct().collect()}
     grown = {int(d.split("=")[1]) for d in after
              if after[d] > before.get(d, 0)}
@@ -2637,7 +2648,7 @@ def test_ivf_index_append_equals_rebuild_and_prunes(spark, tmp_path):
     seg = plan.split("PartitionFilters")[1][:200]
     assert "cell" in seg, plan
     twin = SIM.ivf_index_search(
-        SIM._assign_cells(emb, cent_rows, "embedding"),
+        SIM.assign_cells(emb, cent_rows, "embedding"),
         cent_rows, q, k=5, n_probe=2)
     assert served.collect() == twin.collect()
 
@@ -2945,7 +2956,7 @@ def test_degenerate_inputs_never_break_the_pipeline(spark):
 
     # Probing more cells than exist scans everything, exactly once.
     cent_rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
-    idx = SIM._assign_cells(emb, cent_rows, "embedding")
+    idx = SIM.assign_cells(emb, cent_rows, "embedding")
     assert SIM.ivf_index_search(idx, cent_rows, [1.0, 0.0],
                                 k=5, n_probe=9).count() == 3
 

@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 
 from picoprobedataflow_spark.plans import pipeline as PL
 
+from .assign_reference import cell_pairs, nearest_cell_reference
+
 
 def test_bucketed_join_skips_shuffle(spark, tmp_path):
     """Writing both sides bucketed by the join key lets the sort-merge
@@ -259,8 +261,9 @@ def test_kmeans_cell_partition_pruning_at_write(spark, tmp_path):
         F.transform("embedding", lambda x: x.cast("double")).alias("_v")
     ).localCheckpoint(eager=True)
     cents = SIM.kmeans_centroids(emb, n_clusters=4, n_iter=1, vecs=vecs)
-    assigned = (SIM.kmeans_assign(vecs, cents, vec_col="_v", id_col="_id")
-                .withColumnRenamed("_id", "vec_id"))
+    cent_rows = [(r.cell, list(r.centroid)) for r in cents.collect()]
+    assigned = (SIM.assign_cells(vecs, cent_rows, "_v")
+                .select(F.col("_id").alias("vec_id"), "cell"))
     out = str(tmp_path / "emb_by_cell")
     (emb.join(assigned, "vec_id")
         .write.partitionBy("cell").parquet(out))
@@ -372,27 +375,24 @@ def test_similarity_no_single_partition_window(spark):
 
 
 def test_kmeans_assign_mapside_equals_shuffle_and_plans_narrow(spark):
-    """Nearest-centroid assignment under the inlined centroid-literal
-    expression must (a) produce exactly the shuffle formulation's
-    (id, cell) pairs — same sqdist fold, same (distance, cell)
-    tie-break — and (b) plan as a narrow projection: no Exchange, no
-    join anywhere. At 100 TB this is assignment as a map over the
-    scan instead of k rows per vector through a shuffle."""
+    """Nearest-centroid assignment at or below the cutover (the
+    inlined centroid-literal fold) must (a) produce exactly the
+    crossJoin + ``min_by`` reference's (id, cell) pairs — same
+    distance fold, same (distance, cell) tie-break — and (b) plan as
+    a narrow projection: no Exchange, no join anywhere. At 100 TB
+    this is assignment as a map over the scan instead of k rows per
+    vector through a shuffle."""
     from picoprobedataflow_spark.operators import similarity as SIM
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    vecs = emb.select(
-        F.col("vec_id").alias("_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("_v")
-    ).localCheckpoint(eager=True)
-    cents = SIM.kmeans_centroids(emb, n_clusters=5, n_iter=1, vecs=vecs)
+    vecs = SIM.checkpoint_vecs(emb)
+    cent_rows = SIM.kmeans_centroid_rows(None, n_clusters=5, n_iter=1,
+                                         vecs=vecs)
 
-    mapside = SIM.kmeans_assign(vecs, cents, vec_col="_v", id_col="_id")
-    shuffled = SIM.kmeans_assign_shuffle(vecs, cents,
-                                         vec_col="_v", id_col="_id")
-    got = sorted((r._id, r.cell) for r in mapside.collect())
-    want = sorted((r._id, r.cell) for r in shuffled.collect())
-    assert got == want and len(got) > 0
+    mapside = SIM.assign_cells(vecs, cent_rows, "_v")
+    got = cell_pairs(mapside)
+    assert got == cell_pairs(nearest_cell_reference(vecs, cent_rows))
+    assert len(got) > 0
     assert len({c for _, c in got}) > 1  # non-degenerate clustering
 
     plan = mapside._jdf.queryExecution().executedPlan().toString()
@@ -400,51 +400,41 @@ def test_kmeans_assign_mapside_equals_shuffle_and_plans_narrow(spark):
     assert "Join" not in plan, plan
 
 
-def test_kmeans_assign_packed_equals_expr_and_shuffle(spark):
-    """The packed-broadcast assignment (centroids as ONE broadcast
-    data row, argmin via transform/array_min) must agree row-for-row
-    with BOTH the literal-expression and the crossJoin/min_by
-    formulations at a k past EXPR_ASSIGN_MAX_K — same sqdist fold,
-    same (distance, cell) tie-break — and its plan must be
-    shuffle-free: the only join is the 1-row broadcast nested loop,
-    never an Exchange of the corpus. This is the formulation auto-k
+def test_kmeans_assign_past_cutover_equals_reference(spark):
+    """Past EXPR_ASSIGN_MAX_K centroids the Arrow kernel assigns: it
+    must agree row-for-row with the crossJoin + ``min_by`` reference
+    — same distance fold, same (distance, cell) tie-break — and its
+    plan must be shuffle-free: one MapInArrow over the scan, never an
+    Exchange of the corpus or a join. This is the formulation auto-k
     SemDeDup rides once cell count grows with the corpus."""
     from picoprobedataflow_spark.operators import similarity as SIM
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    vecs = emb.select(
-        F.col("vec_id").alias("_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("_v")
-    ).localCheckpoint(eager=True)
+    vecs = SIM.checkpoint_vecs(emb)
     k = SIM.EXPR_ASSIGN_MAX_K + 9
-    cents = SIM.kmeans_centroids(emb, n_clusters=k, n_iter=1, vecs=vecs)
-    cent_rows = sorted((r.cell, list(r.centroid))
-                       for r in cents.collect())
+    cent_rows = SIM.kmeans_centroid_rows(None, n_clusters=k, n_iter=1,
+                                         vecs=vecs)
 
-    packed = SIM.with_cell_packed(vecs, cents, vec_col="_v")
-    expr = vecs.withColumn("cell",
-                           SIM.kmeans_assign_expr(cent_rows, "_v"))
-    shuffled = SIM.kmeans_assign_shuffle(vecs, cents,
-                                         vec_col="_v", id_col="_id")
-    got = sorted((r._id, r.cell) for r in packed.collect())
-    assert got == sorted((r._id, r.cell) for r in expr.collect())
-    assert got == sorted((r._id, r.cell) for r in shuffled.collect())
+    arrow = SIM.assign_cells(vecs, cent_rows, "_v")
+    got = cell_pairs(arrow)
+    assert got == cell_pairs(nearest_cell_reference(vecs, cent_rows))
     assert len({c for _, c in got}) > 2
 
-    plan = packed._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert "BroadcastNestedLoopJoin" in plan, plan
+    plan = arrow._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
+    assert "Exchange" not in plan and "Join" not in plan, plan
 
 
-def test_kmeans_assign_arrow_equals_packed(spark):
-    """The Arrow/NumPy assignment kernel (round 17) must agree
-    row-for-row with the packed HOF broadcast at a k past the
-    cutover, INCLUDING the degenerate-row rules the HOF fold
-    implies: NULL vector / NULL element / wrong length all yield an
-    all-NULL distance column whose struct ordering resolves to the
-    smallest cell, and NaN components order greater than every
-    finite distance. The auto dispatch must pick the kernel at
-    k >= ARROW_ASSIGN_MIN_K and the packed form below it."""
+def test_kmeans_assign_degenerate_rows_equal_reference(spark):
+    """On both sides of the cutover, assign_cells must agree
+    row-for-row with the crossJoin + ``min_by`` reference INCLUDING
+    the degenerate-row rules the distance fold implies: NULL vector /
+    NULL element / wrong length all yield an all-NULL distance column
+    whose struct ordering resolves to the smallest cell, NaN
+    components order greater than every finite distance, and exact
+    ties (a duplicated centroid) go to the smaller cell. The kernel
+    takes over exactly past EXPR_ASSIGN_MAX_K cells, and ragged
+    centroids stay on the literal fold."""
     from picoprobedataflow_spark.operators import similarity as SIM
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -458,45 +448,41 @@ def test_kmeans_assign_arrow_equals_packed(spark):
          (100003, [1.0] * (dim + 1)),         # long vector
          (100004, [None] + [1.0] * (dim - 1)),  # NULL element
          (100005, [float("nan")] * dim)],     # all-NaN vector
-        f"_id long, _v array<double>")
+        "_id long, _v array<double>")
     vecs = vecs.unionByName(hostile).localCheckpoint(eager=True)
-    k = max(SIM.ARROW_ASSIGN_MIN_K, SIM.EXPR_ASSIGN_MAX_K + 1) + 3
-    cents = SIM.kmeans_centroids(
-        emb, n_clusters=k, n_iter=1,
+    k_max = SIM.EXPR_ASSIGN_MAX_K
+    built = SIM.kmeans_centroid_rows(
+        None, n_clusters=k_max, n_iter=1,
         vecs=vecs.filter(F.col("_id") < 100000))
-    cent_rows = sorted((r.cell, list(r.centroid))
-                       for r in cents.collect())
-
-    arrow = SIM.with_cell_arrow_rows(vecs, cent_rows, vec_col="_v")
-    packed = SIM.with_cell_packed_rows(vecs, cent_rows, vec_col="_v")
-    got = sorted((r._id, r.cell) for r in arrow.collect())
-    want = sorted((r._id, r.cell) for r in packed.collect())
-    assert got == want
-    assert len({c for _, c in got}) > 2
+    # k_max and k_max + 1 centroids, the last one a copy of cell 0:
+    # every vector nearest to cell 0 ties with it
+    below = built[:-1] + [(k_max - 1, built[0][1])]
+    above = built + [(k_max, built[0][1])]
     # A batch holding ONLY a (dim-1)-row and a (dim+1)-row sums to
     # exactly 2*dim flattened elements — a total-length-only fast-path
     # guard would misreshape it; the per-row length check must route
-    # it to the slow path (both rows resolve to the smallest cell).
+    # it to the slow path (both rows resolve to the smallest cell, as
+    # the hostile short and long rows do in the reference).
     tricky = spark.createDataFrame(
         [(1, [1.0] * (dim - 1)), (2, [1.0] * (dim + 1))],
         "_id long, _v array<double>").coalesce(1)
-    got_tricky = sorted(
-        (r._id, r.cell) for r in
-        SIM.with_cell_arrow_rows(tricky, cent_rows,
-                                 vec_col="_v").collect())
-    want_tricky = sorted(
-        (r._id, r.cell) for r in
-        SIM.with_cell_packed_rows(tricky, cent_rows,
-                                  vec_col="_v").collect())
-    assert got_tricky == want_tricky
-    # the auto dispatch picks the kernel exactly at the cutover
-    auto_hi = SIM.with_cell_rows_auto(vecs, cent_rows, vec_col="_v")
-    assert "MapInArrow" in (auto_hi._jdf.queryExecution()
-                            .executedPlan().toString())
-    auto_lo = SIM.with_cell_rows_auto(
-        vecs, cent_rows[:SIM.ARROW_ASSIGN_MIN_K - 1], vec_col="_v")
-    assert "MapInArrow" not in (auto_lo._jdf.queryExecution()
+    for cent_rows, kernel in ((below, False), (above, True)):
+        assigned = SIM.assign_cells(vecs, cent_rows, "_v")
+        plan = assigned._jdf.queryExecution().executedPlan().toString()
+        assert ("MapInArrow" in plan) == kernel, plan
+        got = cell_pairs(assigned)
+        assert got == cell_pairs(nearest_cell_reference(vecs, cent_rows))
+        assert len({c for _, c in got}) > 2
+        assert dict(got)[100001] == 0
+        assert cell_pairs(SIM.assign_cells(tricky, cent_rows, "_v")) \
+            == [(1, 0), (2, 0)]
+    # ragged centroids past the cutover take the literal fold
+    ragged = built + [(k_max, built[0][1][:-1])]
+    assigned = SIM.assign_cells(vecs, ragged, "_v")
+    assert "MapInArrow" not in (assigned._jdf.queryExecution()
                                 .executedPlan().toString())
+    assert cell_pairs(assigned) \
+        == cell_pairs(nearest_cell_reference(vecs, ragged))
 
 
 def test_semdedup_auto_k_rule():
