@@ -12,11 +12,12 @@ argument, so the flow is also the canonical example of how the
 pieces fit.
 
 Scale posture: each enabled stage MATERIALIZES its boundary
-(``localCheckpoint``) — stage outputs feed two consumers (the next
-stage and the funnel count), and at 100 TB the boundary would be a
-persist-to-storage between jobs anyway; the funnel count is then one
-cheap job over materialized partitions, never a recompute of the
-chain. The stages themselves keep their documented shapes: the
+(:func:`..checkpoint.materialize`, an eager ``localCheckpoint``) —
+the stage output feeds the next stage, and at 100 TB the boundary
+would be a persist-to-storage between jobs anyway. The funnel count
+is observed on the checkpoint's own job, so a stage costs no count
+job of its own and never a recompute of the chain. The stages
+themselves keep their documented shapes: the
 quality gates are row-local scans, both dedups are bucketed
 candidate generation + one survivor map, decontamination is a
 shingle-equality semi join against the (broadcastable) benchmark
@@ -28,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from picoprobedataflow_spark.checkpoint import materialize
 
 
 class CurationResult:
@@ -125,19 +128,18 @@ def curate_documents(docs: DataFrame, *,
                 f"{id_col!r} (got {id_type}); pre-assign numeric "
                 f"ids or disable those stages")
 
-    funnel: list[tuple[str, int]] = []
-
-    def _mark(stage: str, df: DataFrame) -> DataFrame:
-        df = df.localCheckpoint(eager=True)
-        funnel.append((stage, df.count()))
-        return df
-
     # The input count is one scan job with NO checkpoint: the source
     # is already materialized storage, and duplicating the biggest,
     # pre-filter frame into executor storage just to count it is the
     # one place the stage-boundary rationale does not apply.
+    funnel: list[tuple[str, int]] = [("input", docs.count())]
+
+    def _mark(stage: str, df: DataFrame) -> DataFrame:
+        df, m = materialize(df, n=F.count(F.lit(1)))
+        funnel.append((stage, m["n"]))
+        return df
+
     cur = docs
-    funnel.append(("input", cur.count()))
 
     if min_quality is not None:
         cur = _mark("quality", cur.filter(

@@ -27,6 +27,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from picoprobedataflow_spark.checkpoint import materialize
 from picoprobedataflow_spark.io import binary_files as BF
 from picoprobedataflow_spark.io import emd as EMD
 from picoprobedataflow_spark.operators import scientific as SC
@@ -89,9 +90,9 @@ def _run_flow(spark: SparkSession, input_dir: str, catalog_path: str | None,
     rows: list[tuple[str, int, str, str, float]] = []
     step = partial(_step, rows, run_id)
     with step("Transfer"):
-        manifest = BF.incremental_ingest(
+        manifest, _ = materialize(BF.incremental_ingest(
             BF.scan_binary_dir(spark, input_dir, glob="*.emd"),
-            processed).localCheckpoint(eager=True)
+            processed))
     files = BF.scan_binary_dir(spark, input_dir, glob="*.emd").join(
         manifest.select("path"), "path", "left_semi")
 
@@ -99,8 +100,8 @@ def _run_flow(spark: SparkSession, input_dir: str, catalog_path: str | None,
         analysis = analyze(files)
 
     with step("Publishv2GatherMetadata"):
-        docs = (BF.manifest_documents(manifest, exp_type=exp_type)
-                .localCheckpoint(eager=True))
+        docs, _ = materialize(
+            BF.manifest_documents(manifest, exp_type=exp_type))
 
     with step("Publishv2Ingest"):
         if catalog_path is not None:
@@ -112,7 +113,7 @@ def _run_flow(spark: SparkSession, input_dir: str, catalog_path: str | None,
 
 def _hyperspectral_tool(files: DataFrame) -> dict[str, DataFrame]:
     # one row per file: image, spectrum and signal rows
-    reduced = EMD.reduce_cubes(files).localCheckpoint(eager=True)
+    reduced, _ = materialize(EMD.reduce_cubes(files))
     return {"image": SC.image_from_sums(reduced),
             "spectrum": SC.spectrum_from_sums(reduced),
             "signals": EMD.reduced_signals(reduced)}
@@ -120,8 +121,7 @@ def _hyperspectral_tool(files: DataFrame) -> dict[str, DataFrame]:
 
 def _temporal_tool(files: DataFrame) -> dict[str, DataFrame]:
     # (T, X, Y) stacks, each frame normalized in the kernel
-    return {"frames_px": EMD.normalize_stacks(files)
-            .localCheckpoint(eager=True)}
+    return {"frames_px": materialize(EMD.normalize_stacks(files))[0]}
 
 
 def hyperspectral_flow(spark: SparkSession, input_dir: str,

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from picoprobedataflow_spark.checkpoint import materialize
+
 WHITESPACE_RE = r"\s+"
 #: "BPE-ish" token splitter: words, numbers, or single punctuation marks.
 BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -469,10 +471,10 @@ def bm25_scores(docs, query_terms, k1: float = 1.2, b: float = 0.75,
     # so the tokenize/explode pipeline runs exactly once (column
     # pruning gives the two consumers different scan schemas, so
     # ReuseExchange alone would not deduplicate them).
-    tf = (toks.groupBy(id_col, "term")
-          .agg(F.count("*").cast("double").alias("tf"),
-               F.max("dl").alias("dl"))
-          ).localCheckpoint(eager=True)
+    tf, _ = materialize(
+        toks.groupBy(id_col, "term")
+        .agg(F.count("*").cast("double").alias("tf"),
+             F.max("dl").alias("dl")))
     # df from the tf aggregate: one row per (doc, term), so the
     # per-term row count IS the document frequency.
     dfq = tf.groupBy("term").agg(
@@ -518,8 +520,8 @@ def unigram_logprob(docs, text_col: str = "text",
     # so the corpus explodes exactly once (at 100 TB this is a
     # persist-to-storage of the (doc, term, tf) table — the standard
     # shape for multi-consumer featurization intermediates).
-    tf = (toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-          .localCheckpoint(eager=True))
+    tf, _ = materialize(
+        toks.groupBy(id_col, "term").agg(F.count("*").alias("tf")))
     # Corpus counts from the tf aggregate (Σ per-term tf), not a
     # second explode.
     uni = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
@@ -567,8 +569,8 @@ def bigram_logprob(docs, text_col: str = "text",
           .select(F.col(id_col), pairs.alias("_p"))
           .select(F.col(id_col), F.col("_p.a").alias("a"),
                   F.col("_p.b").alias("b")))
-    tf = (bi.groupBy(id_col, "a", "b").agg(F.count("*").alias("tf"))
-          .localCheckpoint(eager=True))
+    tf, _ = materialize(
+        bi.groupBy(id_col, "a", "b").agg(F.count("*").alias("tf")))
     big = tf.groupBy("a", "b").agg(F.sum("tf").alias("cnt"))
     ctx = big.groupBy("a").agg(F.sum("cnt").alias("ctx_cnt"))
     nv = ctx.agg(F.count("*").alias("n_ctx"))

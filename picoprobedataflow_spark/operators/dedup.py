@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
 
+from picoprobedataflow_spark.checkpoint import materialize
 from picoprobedataflow_spark.functions.scalar import portable_hash64
 from picoprobedataflow_spark.functions.text import fingerprint_md5, words
 
@@ -893,11 +894,10 @@ def minhash_lsh_dedup(docs: DataFrame, num_hashes: int = 16, k: int = 3,
                       hash_fn: HashFn = portable_hash64) -> DataFrame:
     """Composed MinHash→LSH→estimate flow over the wide-form vector
     table. The vector table feeds three consumers (banding + both
-    sides of the estimate join), so it is persisted once — without
+    sides of the estimate join), so it is checkpointed once — without
     this Spark recomputes the shingle+hash fold once per consumer,
-    tripling the dominant cost. MEMORY_ONLY so long-lived driver
-    sessions stay bounded: under pressure the LRU drops the blocks
-    instead of spilling them. Everything up to the band equi-join —
+    tripling the dominant cost (a persist would outlive the call in
+    the session's cache manager). Everything up to the band equi-join —
     signatures, banding, the per-pair agreement count — is row-local;
     the only shuffles left are candidate generation itself (the band
     join) and the two one-row-per-doc vector lookups."""
@@ -908,10 +908,9 @@ def minhash_lsh_dedup(docs: DataFrame, num_hashes: int = 16, k: int = 3,
     # agreement fold) that then run single-task (~870 ms each in the
     # round-17 stage profile). Same stats gate as the simhash cache:
     # a no-op at corpus scale.
-    vec = _spread_small_cached(
+    vec, _ = materialize(_spread_small_cached(
         minhash_vector(docs, num_hashes, k, text_col, id_col,
-                       hash_fn), id_col).persist(
-                           StorageLevel.MEMORY_ONLY)
+                       hash_fn), id_col))
     pairs = _band_self_join(
         band_vector_signatures(vec, band_size, num_hashes, id_col),
         id_col)
@@ -1350,7 +1349,8 @@ def connected_components(edges: DataFrame, id_a: str = "doc_a",
     cluster longer than ``max_iter`` silently exits BEFORE the
     fixpoint (observed: a 122-node mutual-kNN component at sf0.1
     needs > 25 one-hop rounds). The fixpoint test is a Σcomp
-    monotone check per round. At extreme scale the same loop
+    monotone check per round, observed on the round's checkpoint job
+    (no job of its own). At extreme scale the same loop
     upgrades to the large-star/small-star formulation
     (Kiveris et al., "Connected Components in MapReduce"), which
     bounds rounds at O(log²  n) on adversarial chains — the operator
@@ -1404,23 +1404,24 @@ def connected_components(edges: DataFrame, id_a: str = "doc_a",
                 f"type; got {id_a}: {a_type}, {id_b}: {b_type}")
         return _connected_components_mapped(edges, id_a, id_b,
                                             max_iter)
-    sym = (edges.select(F.col(id_a).cast("long").alias("src"),
-                        F.col(id_b).cast("long").alias("dst"))
-           .union(edges.select(F.col(id_b).cast("long").alias("src"),
-                               F.col(id_a).cast("long").alias("dst")))
-           .distinct()
-           .localCheckpoint(eager=True))
-    # Seed with one propagation round fused into the init: comp0(n) =
-    # min(n, direct neighbors) — same fixpoint, one fewer iteration.
-    labels = (sym.groupBy(F.col("src").alias("node"))
-                 .agg(F.least(F.min("dst"), F.first("src")).alias("comp"))
-                 .localCheckpoint(eager=True))
+    sym, _ = materialize(
+        edges.select(F.col(id_a).cast("long").alias("src"),
+                     F.col(id_b).cast("long").alias("dst"))
+        .union(edges.select(F.col(id_b).cast("long").alias("src"),
+                            F.col(id_a).cast("long").alias("dst")))
+        .distinct())
     # Σcomp in decimal(38,0): exact (integer) and overflow-safe — the
     # salted-hash branch feeds ids spanning the full ±2^63 range, and
     # ANSI long sums over those overflow (found by the image-lane
     # test, not in production).
     _fix_sum = F.sum(F.col("comp").cast("decimal(38,0)"))
-    prev_sum = labels.agg(_fix_sum).first()[0]
+    # Seed with one propagation round fused into the init: comp0(n) =
+    # min(n, direct neighbors) — same fixpoint, one fewer iteration.
+    labels, m = materialize(
+        sym.groupBy(F.col("src").alias("node"))
+        .agg(F.least(F.min("dst"), F.first("src")).alias("comp")),
+        s=_fix_sum)
+    prev_sum = m["s"]
     for _ in range(max_iter):
         prop = (sym.join(labels, sym["src"] == labels["node"])
                    .select(F.col("dst").alias("node"), F.col("comp")))
@@ -1433,16 +1434,15 @@ def connected_components(edges: DataFrame, id_a: str = "doc_a",
         # is unchanged.
         shortcut = labels.select(F.col("node").alias("_cn"),
                                  F.col("comp").alias("_cc"))
-        labels = (hop.join(shortcut, hop["comp"] == shortcut["_cn"],
-                           "left")
-                  .select("node",
-                          F.least("comp", F.coalesce("_cc", "comp"))
-                           .alias("comp"))
-                  .localCheckpoint(eager=True))
+        labels, m = materialize(
+            hop.join(shortcut, hop["comp"] == shortcut["_cn"], "left")
+            .select("node",
+                    F.least("comp", F.coalesce("_cc", "comp"))
+                     .alias("comp")),
+            s=_fix_sum)
         # Labels only ever decrease, so Σcomp is strictly monotone
-        # until the fixpoint: equality IS convergence — a one-row
-        # aggregate over the just-materialized table, no join.
-        cur_sum = labels.agg(_fix_sum).first()[0]
+        # until the fixpoint: equality IS convergence.
+        cur_sum = m["s"]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
@@ -1456,10 +1456,10 @@ def _connected_components_mapped(edges: DataFrame, id_a: str,
     collision-checked salted-hash ids in, numeric CC, min-original-id
     representatives out. Split out so the numeric loop stays exactly
     as pinned."""
-    nodes = (edges.select(F.col(id_a).alias("orig"))
-             .unionAll(edges.select(F.col(id_b).alias("orig")))
-             .distinct()
-             .localCheckpoint(eager=True))
+    nodes, _ = materialize(
+        edges.select(F.col(id_a).alias("orig"))
+        .unionAll(edges.select(F.col(id_b).alias("orig")))
+        .distinct())
     ids = None
     for salt in range(16):
         cand = nodes.select(
@@ -1467,7 +1467,7 @@ def _connected_components_mapped(edges: DataFrame, id_a: str,
         c = cand.agg(F.count("*").alias("n"),
                      F.countDistinct("nid").alias("d")).head()
         if c["n"] == c["d"]:
-            ids = cand.localCheckpoint(eager=True)
+            ids, _ = materialize(cand)
             break
     if ids is None:  # pragma: no cover — P(collision) ~ n²/2^64 per salt
         raise RuntimeError(
@@ -1605,28 +1605,31 @@ def connected_components_star(edges: DataFrame, id_a: str = "doc_a",
     per-round cost shape as label propagation, so for typical dense
     dedup clusters either works; this one also survives pathological
     chains. Fixpoint = identical edge multiset two rounds running
-    (count + containment check — driver-side scalars only).
+    (count + containment check — driver-side scalars only; the count
+    is observed on the round's checkpoint job).
 
     Returns the same (node, comp) contract as
     :func:`connected_components`, comp = min id of the component;
     isolated self-loop-only nodes map to themselves.
     """
-    nodes = (edges.select(F.col(id_a).cast("long").alias("n"))
-             .union(edges.select(F.col(id_b).cast("long").alias("n")))
-             .distinct()
-             .localCheckpoint(eager=True))
-    e = (edges.select(F.col(id_a).cast("long").alias("u"),
-                      F.col(id_b).cast("long").alias("v"))
-         .filter(F.col("u") != F.col("v"))
-         .distinct()
-         .localCheckpoint(eager=True))
+    nodes, _ = materialize(
+        edges.select(F.col(id_a).cast("long").alias("n"))
+        .union(edges.select(F.col(id_b).cast("long").alias("n")))
+        .distinct())
+    e, m = materialize(
+        edges.select(F.col(id_a).cast("long").alias("u"),
+                     F.col(id_b).cast("long").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct(), n=F.count(F.lit(1)))
+    n_e = m["n"]
     for _ in range(max_iter):
-        if e.limit(1).count() == 0:
+        if n_e == 0:
             break
-        new_e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        unchanged = (new_e.count() == e.count()
+        new_e, m = materialize(_small_star(_large_star(e)),
+                               n=F.count(F.lit(1)))
+        unchanged = (m["n"] == n_e
                      and new_e.exceptAll(e).limit(1).count() == 0)
-        e = new_e
+        e, n_e = new_e, m["n"]
         if unchanged:
             break
     # at the star fixpoint every edge points child -> component root

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from picoprobedataflow_spark.checkpoint import materialize
+
 #: Zero-proportion clamp for the PSI log ratio: an empty bucket on
 #: either side would send ln(p/q) to ±inf; the conventional fix
 #: (shared by every production PSI implementation) floors both
@@ -72,35 +74,30 @@ def _bucket_counts(df: DataFrame, value_col: str,
 
 
 def psi_reference(ref: DataFrame, value_col: str,
-                  n_buckets: int = 10,
-                  materialize: bool = False) -> PsiReference:
+                  n_buckets: int = 10) -> PsiReference:
     """Build the reference half: exact ``1/n .. (n-1)/n`` quantile
-    edges and the always-``n_buckets``-row reference bucket counts.
-    The 1-row edges frame is ALWAYS eager-checkpointed: every caller
+    edges and the always-``n_buckets``-row reference bucket counts,
+    both eager-checkpointed. The 1-row edges frame: every caller
     broadcasts it into at least two bucket-count passes (ref + cur),
     so a lazy edges frame re-runs the reference percentile scan per
     consumer — the round-17 plan audit counted the psi scoreboard
-    scanning its reference corpus 8x for a 10-row result.
-    ``materialize=True`` additionally localCheckpoints the
-    ``n_buckets``-row count table — use it when the reference will
-    be scored against repeatedly (the streaming monitor)."""
+    scanning its reference corpus 8x for a 10-row result. The
+    ``n_buckets``-row count table: the reference is built once and
+    scored many times (the streaming monitor)."""
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
     v = F.col(value_col).cast("double")
     qs = [i / n_buckets for i in range(1, n_buckets)]
-    edges_row = (ref.filter(v.isNotNull()).agg(
+    edges_row, _ = materialize(ref.filter(v.isNotNull()).agg(
         F.percentile(v, F.array(*[F.lit(q) for q in qs]))
-         .alias("_edges"))
-        .localCheckpoint(eager=True))
+         .alias("_edges")))
     spark = ref.sparkSession
     grid = spark.range(n_buckets).select(
         F.col("id").cast("int").alias("bucket"))
-    counts = (grid.join(_bucket_counts(ref, value_col, edges_row,
-                                       "n_ref"), "bucket", "left")
-              .select("bucket",
-                      F.coalesce("n_ref", F.lit(0)).alias("n_ref")))
-    if materialize:
-        counts = counts.localCheckpoint(eager=True)
+    counts, _ = materialize(
+        grid.join(_bucket_counts(ref, value_col, edges_row, "n_ref"),
+                  "bucket", "left")
+        .select("bucket", F.coalesce("n_ref", F.lit(0)).alias("n_ref")))
     return PsiReference(edges_row, counts, n_buckets)
 
 
@@ -115,12 +112,12 @@ def psi_score(cur: DataFrame, value_col: str,
     # whole ref+cur bucket-count subtree re-evaluates per consumer
     # (guide §5: reused AND expensive to recompute; the frame is
     # k-bounded by contract).
-    j = (reference.counts
-         .join(_bucket_counts(cur, value_col, reference.edges_row,
-                              "n_cur"), "bucket", "left")
-         .select("bucket", "n_ref",
-                 F.coalesce("n_cur", F.lit(0)).alias("n_cur"))
-         .localCheckpoint(eager=True))
+    j, _ = materialize(
+        reference.counts
+        .join(_bucket_counts(cur, value_col, reference.edges_row,
+                             "n_cur"), "bucket", "left")
+        .select("bucket", "n_ref",
+                F.coalesce("n_cur", F.lit(0)).alias("n_cur")))
     tot = j.agg(F.sum("n_ref").alias("_tr"),
                 F.sum("n_cur").alias("_tc"))
     p_ref = F.greatest(F.col("n_ref") / F.greatest(F.col("_tr"),
@@ -192,14 +189,11 @@ class KsReference:
 
 
 def ks_reference(ref: DataFrame, value_col: str,
-                 round_to: int | None = None,
-                 materialize: bool = False) -> KsReference:
-    """Build the KS reference counts; ``materialize=True``
-    localCheckpoints them for repeated scoring (the streaming
-    monitor — without it every micro-batch re-scans the reference)."""
-    counts = _value_counts(ref, value_col, round_to, "c_ref")
-    if materialize:
-        counts = counts.localCheckpoint(eager=True)
+                 round_to: int | None = None) -> KsReference:
+    """Build the KS reference counts, eager-checkpointed for repeated
+    scoring (the streaming monitor — without it every micro-batch
+    re-scans the reference)."""
+    counts, _ = materialize(_value_counts(ref, value_col, round_to, "c_ref"))
     return KsReference(counts, round_to)
 
 
@@ -315,8 +309,7 @@ def ks_score(cur: DataFrame, value_col: str,
     # re-derived the corpus scans + full-outer join; AQE exchange
     # reuse recovered only part of it). Storage is the
     # distinct-value table the op shuffles anyway.
-    c = (_joined_counts(cur, value_col, reference)
-         .localCheckpoint(eager=True))
+    c, _ = materialize(_joined_counts(cur, value_col, reference))
     bounds = c.agg(F.min("v").alias("_lo"), F.max("v").alias("_hi"))
     span = F.col("_hi") - F.col("_lo")
     shard = F.when(
@@ -368,8 +361,7 @@ def ks_score_single_window(cur: DataFrame, value_col: str,
     caught the un-checkpointed small form re-deriving the two
     snapshot scans + the full-outer merge per consumer (6 parquet
     scans, 21 exchanges for a 1-row result)."""
-    c = (_joined_counts(cur, value_col, reference)
-         .localCheckpoint(eager=True))
+    c, _ = materialize(_joined_counts(cur, value_col, reference))
     tot = c.agg(F.sum("c_ref").cast("long").alias("n_ref"),
                 F.sum("c_cur").cast("long").alias("n_cur"))
     w = Window.orderBy("v").rowsBetween(
@@ -443,8 +435,7 @@ def _cat_counts(df: DataFrame, cat_col: str,
 
 def chi2_reference(ref: DataFrame, cat_col: str,
                    top_k: int | None = None,
-                   other_label: str = "__other__",
-                   materialize: bool = False) -> Chi2Reference:
+                   other_label: str = "__other__") -> Chi2Reference:
     """Build the chi-square reference counts. ``top_k`` keeps the k
     most frequent reference categories (ties broken by category
     value — deterministic) and rolls the rest into ``other_label``;
@@ -452,9 +443,9 @@ def chi2_reference(ref: DataFrame, cat_col: str,
     category that was rare at reference time lands in the other
     bucket on both sides and never inflates the table. The rank
     window is global but runs over the category-cardinality-bounded
-    count table (the zipf/top-N convention), not the corpus.
-    ``materialize=True`` localCheckpoints the counts for repeated
-    scoring (the streaming monitor)."""
+    count table (the zipf/top-N convention), not the corpus. The
+    counts are eager-checkpointed for repeated scoring (the streaming
+    monitor)."""
     counts = _cat_counts(ref, cat_col, "c_ref")
     if top_k is not None:
         if top_k < 1:
@@ -467,8 +458,7 @@ def chi2_reference(ref: DataFrame, cat_col: str,
                           "c_ref")
                   .groupBy("cat")
                   .agg(F.sum("c_ref").alias("c_ref")))
-    if materialize:
-        counts = counts.localCheckpoint(eager=True)
+    counts, _ = materialize(counts)
     return Chi2Reference(counts, top_k, other_label)
 
 
@@ -491,13 +481,13 @@ def chi2_score(cur: DataFrame, cat_col: str,
     # Category-cardinality-bounded scoreboard, two consumers (totals
     # + final) — materialize once (guide §5; the round-17 plan audit
     # counted the un-checkpointed form scanning each snapshot twice).
-    j = (reference.counts.join(cc, "cat", "full_outer")
-         .select(F.col("cat").alias("category"),
-                 F.coalesce("c_ref", F.lit(0)).cast("long")
-                  .alias("n_ref"),
-                 F.coalesce("c_cur", F.lit(0)).cast("long")
-                  .alias("n_cur"))
-         .localCheckpoint(eager=True))
+    j, _ = materialize(
+        reference.counts.join(cc, "cat", "full_outer")
+        .select(F.col("cat").alias("category"),
+                F.coalesce("c_ref", F.lit(0)).cast("long")
+                 .alias("n_ref"),
+                F.coalesce("c_cur", F.lit(0)).cast("long")
+                 .alias("n_cur")))
     tot = j.agg(F.sum("n_ref").cast("long").alias("_tr"),
                 F.sum("n_cur").cast("long").alias("_tc"))
     col_tot = F.col("n_ref") + F.col("n_cur")

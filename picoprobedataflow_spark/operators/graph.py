@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from picoprobedataflow_spark.checkpoint import materialize
+
 
 def _built_edges(edges: DataFrame, src_col: str, dst_col: str,
                  prebuilt: bool, verify_prebuilt: bool) -> DataFrame:
@@ -41,9 +43,7 @@ def _built_edges(edges: DataFrame, src_col: str, dst_col: str,
     e = edges.select(F.col(src_col).alias("src"),
                      F.col(dst_col).alias("dst"))
     if not prebuilt:
-        return (e.distinct()
-                .repartition("src")
-                .localCheckpoint(eager=True))
+        return materialize(e.distinct().repartition("src"))[0]
     if verify_prebuilt:
         dup = (e.groupBy("src", "dst")
                .agg(F.count("*").alias("_c"))
@@ -196,41 +196,31 @@ def pagerank(edges: DataFrame, n_iter: int = 10,
         # share ratio exactly while making the arithmetic
         # overflow-free at any weight magnitude.
         emax = ecol.groupBy("src").agg(F.max("_w").alias("_mx"))
-        e = (ecol.join(emax, "src")
-             .select("src", "dst",
-                     (F.col("_w") / F.col("_mx")).alias("_w"))
-             .repartition("src")
-             .localCheckpoint(eager=True))
+        e, _ = materialize(
+            ecol.join(emax, "src")
+            .select("src", "dst",
+                    (F.col("_w") / F.col("_mx")).alias("_w"))
+            .repartition("src"))
         # Node universe from the UNFILTERED endpoints (review find):
         # a node mentioned only by dropped-weight edges must still
         # rank (as dangling/isolated — "a zero-weight edge is no
         # edge" removes the FLOW, not the node), matching what the
         # unweighted run over the same table returns.
         node_src = raw
-    nodes = (node_src.select(F.col("src").alias("node"))
-             .unionAll(node_src.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint(eager=True))
-    n_nodes = nodes.count()
-    if weight_col is None:
-        outd = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-        base = (nodes.join(outd, nodes["node"] == outd["src"],
-                           "left")
-                .select("node",
-                        F.coalesce("outdeg", F.lit(0)).cast("long")
-                         .alias("outdeg"))
-                .localCheckpoint(eager=True))
-    else:
-        outd = e.groupBy("src").agg(
-            F.count("*").alias("outdeg"),
-            F.sum("_w").alias("_s"))
-        base = (nodes.join(outd, nodes["node"] == outd["src"],
-                           "left")
-                .select("node",
-                        F.coalesce("outdeg", F.lit(0)).cast("long")
-                         .alias("outdeg"),
-                        F.coalesce("_s", F.lit(0.0)).alias("_s"))
-                .localCheckpoint(eager=True))
+    nodes, m = materialize(
+        node_src.select(F.col("src").alias("node"))
+        .unionAll(node_src.select(F.col("dst").alias("node")))
+        .distinct(), n=F.count(F.lit(1)))
+    n_nodes = m["n"]
+    aggs = [F.count("*").alias("outdeg")]
+    cols = [F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg")]
+    if weight_col is not None:
+        aggs.append(F.sum("_w").alias("_s"))
+        cols.append(F.coalesce("_s", F.lit(0.0)).alias("_s"))
+    outd = e.groupBy("src").agg(*aggs)
+    base, _ = materialize(
+        nodes.join(outd, nodes["node"] == outd["src"], "left")
+        .select("node", *cols))
     if seeds is not None and len(seeds.columns) != 1:
         # Eager rejection (review find, same silent-shape class as
         # logreg_predict's zip-truncation): narrowing a multi-column
@@ -257,18 +247,19 @@ def pagerank(edges: DataFrame, n_iter: int = 10,
         seed_df = (seeds.select(F.col(seeds.columns[0])
                                 .alias("node"))
                    .distinct())
-        base = (base.join(F.broadcast(
-                    seed_df.withColumn("_seed", F.lit(True))),
-                    "node", "left")
-                # Re-select by the PRE-JOIN column list (review
-                # find, reproduced live: naming node/outdeg here
-                # dropped the weighted path's _s column, making
-                # seeds + weight_col crash at the pr init).
-                .select(*[c for c in base.columns],
-                        F.coalesce("_seed", F.lit(False))
-                         .alias("_seed"))
-                .localCheckpoint(eager=True))
-        n_tele = base.filter(F.col("_seed")).count()
+        base, m = materialize(
+            base.join(F.broadcast(
+                seed_df.withColumn("_seed", F.lit(True))),
+                "node", "left")
+            # Re-select by the PRE-JOIN column list (review
+            # find, reproduced live: naming node/outdeg here
+            # dropped the weighted path's _s column, making
+            # seeds + weight_col crash at the pr init).
+            .select(*[c for c in base.columns],
+                    F.coalesce("_seed", F.lit(False))
+                     .alias("_seed")),
+            n_tele=F.count_if(F.col("_seed")))
+        n_tele = m["n_tele"]
         if n_tele == 0:
             raise ValueError(
                 "seeds contains no node present in the graph — the "
@@ -379,7 +370,7 @@ def pagerank(edges: DataFrame, n_iter: int = 10,
         # and a failure recomputes everything); with it each round is
         # one bounded job, the same reason the k-means build
         # checkpoints per iteration.
-        pr = pr.localCheckpoint(eager=True)
+        pr, _ = materialize(pr)
     pr = pr.drop("_seed", "_s")
     if round_digits is not None:
         pr = pr.select("node", "outdeg",
@@ -438,11 +429,11 @@ def hits(edges: DataFrame, n_iter: int = 10,
         raise ValueError("n_iter must be >= 1")
     e = _built_edges(edges, src_col, dst_col,
                      prebuilt, verify_prebuilt)
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionAll(e.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint(eager=True))
-    n_nodes = nodes.count()
+    nodes, m = materialize(
+        e.select(F.col("src").alias("node"))
+        .unionAll(e.select(F.col("dst").alias("node")))
+        .distinct(), n=F.count(F.lit(1)))
+    n_nodes = m["n"]
     if n_nodes == 0:
         return nodes.select("node", F.lit(0.0).alias("hub"),
                             F.lit(0.0).alias("auth"))
@@ -477,12 +468,10 @@ def hits(edges: DataFrame, n_iter: int = 10,
         # 1.59→1.48 s, med 1.92→1.66 s on the 3-iteration bench key,
         # fixpoint bit-identical). One extra k-bounded job per
         # iteration buys one fewer full push evaluation.
-        auth = _push(v, "src", "dst", "hub", "auth") \
-            .localCheckpoint(eager=True)
+        auth, _ = materialize(_push(v, "src", "dst", "hub", "auth"))
         hub = _push(auth, "dst", "src", "auth", "hub")
-        v = (hub.join(auth, "node")
-             .select("node", "hub", "auth")
-             .localCheckpoint(eager=True))
+        v, _ = materialize(hub.join(auth, "node")
+                           .select("node", "hub", "auth"))
     if round_digits is not None:
         v = v.select("node", F.round("hub", round_digits).alias("hub"),
                      F.round("auth", round_digits).alias("auth"))

@@ -19,9 +19,9 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from picoprobedataflow_spark import ship_by_value
+from picoprobedataflow_spark.checkpoint import materialize
 from picoprobedataflow_spark.functions import vectors as V
 
 
@@ -411,10 +411,10 @@ def checkpoint_vecs(emb: DataFrame, vec_col: str = "embedding",
                      id_col: str = "vec_id") -> DataFrame:
     """The eagerly checkpointed ``(_id, _v array<double>)`` projection
     every k-means, PQ and IVF build scans."""
-    return emb.select(
+    return materialize(emb.select(
         F.col(id_col).alias("_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v")
-    ).localCheckpoint(eager=True)
+    ))[0]
 
 
 def kmeans_seed_query(vecs: DataFrame, n_clusters: int) -> DataFrame:
@@ -898,14 +898,12 @@ def semantic_dedup(emb: DataFrame, n_clusters: int | None = None,
         cent_rows = semdedup_centroid_rows(
             emb, n_iter, vec_col, id_col, target_cell_pop,
             n_clusters=n_clusters, vecs=vecs)
-    assigned = assign_cells(vecs, cent_rows, "_v")
-
     # The assignment output feeds THREE consumers (both self-join
     # sides and the final verdict join) and Spark plans them as
-    # independent subtrees — un-persisted, the whole argmin pass ran
-    # once per consumer (round 17; guide §5). MEMORY_ONLY: evictable,
-    # recompute on loss, never spills.
-    assigned = assigned.persist(StorageLevel.MEMORY_ONLY)
+    # independent subtrees — un-materialized, the whole argmin pass
+    # ran once per consumer (round 17; guide §5). Checkpointed, as a
+    # persist would outlive the call in the session's cache manager.
+    assigned, _ = materialize(assign_cells(vecs, cent_rows, "_v"))
     a = assigned.select(F.col("_id").alias("id_a"),
                         F.col("_v").alias("v_a"),
                         V.norm(F.col("_v")).alias("n_a"), "cell")
@@ -1305,9 +1303,9 @@ def ivfpq_residual_search(emb: DataFrame, query_vec: list[float],
         coarse_rows = sorted(kmeans_centroid_rows(
             None, n_cells, n_iter, vecs=vecs))
     if res_codebooks is None:
-        residuals = (with_residual(vecs, coarse_rows)
-                     .select("_id", F.col("_r").alias("_v"))
-                     .localCheckpoint(eager=True))
+        residuals, _ = materialize(
+            with_residual(vecs, coarse_rows)
+            .select("_id", F.col("_r").alias("_v")))
         _, codebooks = pq_encode(None, m, n_codes, n_iter, dim,
                                  vecs=residuals)
     else:

@@ -19,6 +19,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from picoprobedataflow_spark.checkpoint import materialize
 from picoprobedataflow_spark.functions import text as TX
 from picoprobedataflow_spark.functions import web as WB
 from picoprobedataflow_spark.operators import audio as AU
@@ -364,12 +365,12 @@ def _spark_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(method, doc_a, doc_b, score) — the three candidate generators
     over one shared shingle materialization."""
     docs = tbl(spark, sf_dir, "documents").filter(F.col("doc_id") < _DOC_CAP)
-    sh = DD.shingle_table(docs, k=3).localCheckpoint(eager=True)
+    sh, _ = materialize(DD.shingle_table(docs, k=3))
     jp = (DD.jaccard_pairs(docs, k=3, threshold=0.02, shingles=sh)
             .select(F.lit("jaccard").alias("method"), "doc_a", "doc_b",
                     F.round("jaccard", 6).alias("score")))
-    sigs = (DD.minhash_signatures(docs, num_hashes=16, k=3, shingles=sh)
-              .localCheckpoint(eager=True))
+    sigs, _ = materialize(
+        DD.minhash_signatures(docs, num_hashes=16, k=3, shingles=sh))
     cand = DD.lsh_candidate_pairs(sigs, band_size=4)
     mp = (DD.minhash_jaccard_estimate(sigs, cand, num_hashes=16)
             .select(F.lit("minhash_lsh").alias("method"), "doc_a", "doc_b",
@@ -2001,9 +2002,8 @@ def _build_quantizers(spark: SparkSession, sf_dir: str) -> tuple:
                                      vecs=vecs)
     coarse_rows = sorted(SIM.kmeans_centroid_rows(
         None, _KM_K, _KM_ITER, vecs=vecs))
-    residuals = (SIM.with_residual(vecs, coarse_rows)
-                 .select("_id", F.col("_r").alias("_v"))
-                 .localCheckpoint(eager=True))
+    residuals, _ = materialize(SIM.with_residual(vecs, coarse_rows)
+                               .select("_id", F.col("_r").alias("_v")))
     _, res_books = SIM.pq_encode(None, _PQ_M, _PQ_CODES, _PQ_ITER,
                                  vecs=residuals)
     return (qvec, vecs, codes, raw_books, coarse_rows, res_books)
@@ -2764,9 +2764,8 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ran three times. The tf table is the gate's documented
     # truth-column cost; the term-table-free production path ships
     # as streaming/cms_stream._cells_of.
-    tf = (toks.groupBy("tok")
-          .agg(F.count("*").cast("long").alias("cnt"))
-          .localCheckpoint(eager=True))
+    tf, _ = materialize(toks.groupBy("tok")
+                        .agg(F.count("*").cast("long").alias("cnt")))
 
     # d bucket ids per term as ONE row-local array projection +
     # posexplode (round 16): the previous d-way unionByName ladder
@@ -4023,10 +4022,9 @@ def pagerank_warm_scores(spark: SparkSession,
     edges = _pr_edges(spark, sf_dir)
     init = session_memo(
         spark, "pagerank_warm", sf_dir,
-        lambda: (pagerank(edges, n_iter=10, damping=_PR_DAMP,
-                          round_digits=None)
-                 .select("node", "pr")
-                 .localCheckpoint(eager=True)))
+        lambda: materialize(pagerank(edges, n_iter=10, damping=_PR_DAMP,
+                                     round_digits=None)
+                            .select("node", "pr"))[0])
     return pagerank(edges, n_iter=2, damping=_PR_DAMP,
                     init_ranks=init)
 
@@ -5735,7 +5733,7 @@ def doremi_mixture_weights(spark: SparkSession,
         # whole ladder reuses. Values unchanged: a checkpoint is a
         # materialization boundary only.
         if _t % 2 == 0:
-            cur = cur.localCheckpoint(eager=True)
+            cur, _ = materialize(cur)
         avg = cur.agg(F.sum(F.col("w") * F.col("loss"))
                       .alias("_avg"))
         cur = (cur.crossJoin(F.broadcast(avg))

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from picoprobedataflow_spark.checkpoint import materialize
 from picoprobedataflow_spark.plans.catalog import query
 from picoprobedataflow_spark.plans.common import cents, events_us, tbl
 
@@ -220,14 +221,14 @@ def approx_sketches_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle-arrival-order-dependent — the median validated in `out`
     # could differ from the median `rankchk` measured, flipping
     # median_ok spuriously. One evaluation, one median.
-    sk = ev.groupBy("event_type").agg(
+    sk, _ = materialize(ev.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", rsd).alias("approx_users"),
         F.percentile_approx("value", F.lit(0.5),
                             F.lit(accuracy)).alias("approx_median"),
         F.count("*").alias("n"),
         F.countDistinct("user_id").alias("exact_users"),
         F.hll_sketch_agg("user_id").alias("_hll")
-    ).localCheckpoint(eager=True)
+    ))
     merged = sk.agg(
         F.hll_sketch_estimate(F.hll_union_agg("_hll"))
          .alias("merged_est"))

@@ -25,7 +25,8 @@ durable cross-batch state the corpus-wide stages need:
   the ST4/span_dedup families document.
 - ``kept/`` — the admitted documents per epoch (the flow output);
   ``funnel/`` — per-epoch (stage, n) rows, the same accounting the
-  batch flow returns in ``CurationResult.funnel``.
+  batch flow returns in ``CurationResult.funnel``; each stage's count
+  is observed on its checkpoint job (no count job per stage).
 
 All writes are per-epoch DYNAMIC partition overwrites — a replayed
 epoch overwrites its own partitions instead of appending duplicates
@@ -48,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from picoprobedataflow_spark.checkpoint import materialize
 from picoprobedataflow_spark.streaming import loop
 from picoprobedataflow_spark.streaming.dedup_stream import (
     _state, _write_epoch, batch_anti_state)
@@ -100,30 +102,32 @@ def run_curation_stream(doc_stream: DataFrame, state_dir: str,
     dom_dir = os.path.join(state_dir, "domains")
     kept_dir = os.path.join(state_dir, "kept")
     funnel_dir = os.path.join(state_dir, "funnel")
-    bench = (bench_docs.localCheckpoint(eager=True)
+    bench = (materialize(bench_docs)[0]
              if bench_docs is not None else None)
 
     def _process(batch: DataFrame, epoch_id: int) -> None:
-        if not batch.head(1):
+        n_input = batch.count()
+        if n_input == 0:
             return
-        funnel: list[tuple[str, int]] = []
+        funnel: list[tuple[str, int]] = [("input", n_input)]
+
+        def _mark(stage: str, df: DataFrame) -> DataFrame:
+            df, m = materialize(df, n=F.count(F.lit(1)))
+            funnel.append((stage, m["n"]))
+            return df
+
         cur = batch
-        funnel.append(("input", cur.count()))
 
         if min_quality is not None:
-            cur = (cur.filter(F.col(text_col).isNotNull()
-                              & (quality_score(text_col)
-                                 >= min_quality))
-                   .localCheckpoint(eager=True))
-            funnel.append(("quality", cur.count()))
+            cur = _mark("quality", cur.filter(
+                F.col(text_col).isNotNull()
+                & (quality_score(text_col) >= min_quality)))
 
         if repetition_filter:
             rep = repetition_metrics(cur, id_col=id_col,
                                      text_col=text_col)
-            cur = (cur.join(rep.filter(F.col("keep"))
-                            .select(id_col), id_col)
-                   .localCheckpoint(eager=True))
-            funnel.append(("repetition", cur.count()))
+            cur = _mark("repetition", cur.join(
+                rep.filter(F.col("keep")).select(id_col), id_col))
 
         # exact dedup vs state: first arrival survives. Within the
         # batch the min id per fingerprint wins (the batch flow's
@@ -149,9 +153,9 @@ def run_curation_stream(doc_stream: DataFrame, state_dir: str,
         # where the loop's contract is per-epoch-∝-batch; the
         # keys-only batch fingerprint set rides both broadcasts, so
         # the state is scanned map-side, never exchanged.
-        batch_fps = (withfp.filter(F.col("_fp").isNotNull())
-                     .select("_fp").distinct()
-                     .localCheckpoint(eager=True))
+        batch_fps, _ = materialize(
+            withfp.filter(F.col("_fp").isNotNull())
+            .select("_fp").distinct())
         seen_fp = seen.withColumnRenamed("fingerprint", "_fp")
         deduped = batch_anti_state(
             (withfp.filter(F.col("_fp").isNotNull())
@@ -159,13 +163,11 @@ def run_curation_stream(doc_stream: DataFrame, state_dir: str,
              .filter(F.col(id_col) == F.col("_first"))
              .drop("_first")),
             seen_fp, ["_fp"], batch_keys=batch_fps)
-        cur = (deduped
-               .unionByName(withfp.filter(F.col("_fp").isNull()))
-               .localCheckpoint(eager=True))
+        cur = _mark("exact", deduped.unionByName(
+            withfp.filter(F.col("_fp").isNull())))
         new_fps = (batch_anti_state(batch_fps, seen_fp, ["_fp"],
                                     batch_keys=batch_fps)
                    .withColumnRenamed("_fp", "fingerprint"))
-        funnel.append(("exact", cur.count()))
 
         if bench is not None:
             from picoprobedataflow_spark.operators.dedup import \
@@ -173,10 +175,8 @@ def run_curation_stream(doc_stream: DataFrame, state_dir: str,
             contaminated = contamination_overlap(
                 cur, bench, text_col=text_col, id_col=id_col,
                 threshold=contamination_threshold)
-            cur = (cur.join(contaminated.select(id_col), id_col,
-                            "left_anti")
-                   .localCheckpoint(eager=True))
-            funnel.append(("decontam", cur.count()))
+            cur = _mark("decontam", cur.join(
+                contaminated.select(id_col), id_col, "left_anti"))
 
         if url_col is not None:
             from picoprobedataflow_spark.functions.web import \
@@ -188,12 +188,12 @@ def run_curation_stream(doc_stream: DataFrame, state_dir: str,
             # with xxhash64-derived ids). Checkpointed (round 17):
             # it now feeds two consumers — the batch-domain key set
             # and the admission filter.
-            ranked = domain_quota_sample(
+            ranked, _ = materialize(domain_quota_sample(
                 cur.withColumn("_neg_id",
                                F.bitwise_not(
                                    F.col(id_col).cast("long"))),
                 url_col=url_col, quota=domain_quota, id_col=id_col,
-                order_col="_neg_id").localCheckpoint(eager=True)
+                order_col="_neg_id"))
             # Prior per-domain counts restricted to the BATCH's
             # domains before aggregating (round 17, the
             # batch_anti_state discipline): the accumulated domain
@@ -224,15 +224,13 @@ def run_curation_stream(doc_stream: DataFrame, state_dir: str,
             # at micro-batch time). The quota-derived domain — the
             # registrable domain of url_col — is authoritative for
             # the kept/ contract and the domains/ state.
-            cur = (cur.drop("_fp", "domain")
-                   .join(admitted, id_col)
-                   .withColumnRenamed("_q_dom", "domain")
-                   .localCheckpoint(eager=True))
-            funnel.append(("quota", cur.count()))
+            cur = _mark("quota", cur.drop("_fp", "domain")
+                        .join(admitted, id_col)
+                        .withColumnRenamed("_q_dom", "domain"))
             new_doms = (cur.groupBy("domain")
                         .agg(F.count("*").cast("long").alias("n")))
         else:
-            cur = cur.drop("_fp").localCheckpoint(eager=True)
+            cur, _ = materialize(cur.drop("_fp"))
             new_doms = None
 
         # kept BEFORE state (the dedup_stream replay rule): a

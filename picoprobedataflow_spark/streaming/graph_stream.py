@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from picoprobedataflow_spark import checkpoint
 from picoprobedataflow_spark.streaming import loop
 from picoprobedataflow_spark.streaming.dedup_stream import (
     _fs_list, _state, _write_epoch)
@@ -119,11 +120,11 @@ def epoch_graph(prior_edges: DataFrame, delta: DataFrame,
     new_edges = batch_anti_state(delta, prior_edges,
                                  ["src", "dst"], batch_keys=delta)
     if materialize:
-        new_edges = new_edges.localCheckpoint(eager=True)
+        new_edges, _ = checkpoint.materialize(new_edges)
     graph = (prior_edges.unionByName(new_edges)
              .repartition("src"))
     if materialize:
-        graph = graph.localCheckpoint(eager=True)
+        graph, _ = checkpoint.materialize(graph)
     return graph, new_edges
 
 
@@ -166,17 +167,15 @@ def run_pagerank_stream(edge_stream: DataFrame, state_dir: str,
     def _process(batch: DataFrame, epoch_id: int) -> None:
         # eager materialization (review find — the curation/dedup
         # loop convention): delta otherwise re-reads the micro-batch
-        # source for the head(1) guard, the graph checkpoint inside
-        # pagerank, and the new-edges write — three scans per epoch.
-        delta = (batch.select(F.col(src_col).cast("string")
-                              .alias("src"),
-                              F.col(dst_col).cast("string")
-                              .alias("dst"))
-                 .filter(F.col("src").isNotNull()
-                         & F.col("dst").isNotNull())
-                 .distinct()
-                 .localCheckpoint(eager=True))
-        if not delta.head(1):
+        # source for the graph checkpoint inside pagerank and the
+        # new-edges write. Its row count, observed on the same job,
+        # is the emptiness guard.
+        delta, m = checkpoint.materialize(
+            batch.select(F.col(src_col).cast("string").alias("src"),
+                         F.col(dst_col).cast("string").alias("dst"))
+            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+            .distinct(), n=F.count(F.lit(1)))
+        if m["n"] == 0:
             return
         prior_edges = _state(spark, edge_dir, EDGE_SCHEMA,
                              before_epoch=epoch_id)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from picoprobedataflow_spark.checkpoint import materialize
 from picoprobedataflow_spark.streaming import loop
 
 
@@ -91,18 +92,15 @@ def contam_gate_stream(spark: SparkSession, src_dir: str,
         contamination_overlap, contamination_overlap_bloom,
         shingle_table)
 
-    bench_sh = shingle_table(bench_docs, k=k).localCheckpoint(
-        eager=True)
+    bench_sh, _ = materialize(shingle_table(bench_docs, k=k))
     if bloom_bits_count is not None:
-        universe = (bench_sh.select("shingle").distinct()
-                    .localCheckpoint(eager=True))
+        universe, _ = materialize(bench_sh.select("shingle").distinct())
         if bloom_bits_count <= BLOOM_LITERAL_MAX_BITS:
             bits, bloom_df = bloom_bits(
                 universe, num_bits=bloom_bits_count), None
         else:
-            bits, bloom_df = None, bloom_filter_df(
-                universe,
-                num_bits=bloom_bits_count).localCheckpoint(eager=True)
+            bits, bloom_df = None, materialize(bloom_filter_df(
+                universe, num_bits=bloom_bits_count))[0]
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if bloom_bits_count is not None:
@@ -167,17 +165,15 @@ def decontam_stream(spark: SparkSession, src_dir: str,
         BLOOM_LITERAL_MAX_BITS, bloom_bits, bloom_filter_df,
         decontaminate_spans, shingle_table)
 
-    universe = (shingle_table(bench_docs, k=k)
-                .select("shingle").distinct()
-                .localCheckpoint(eager=True))
+    universe, _ = materialize(shingle_table(bench_docs, k=k)
+                              .select("shingle").distinct())
     bits = bloom_df = None
     if bloom_bits_count is not None:
         if bloom_bits_count <= BLOOM_LITERAL_MAX_BITS:
             bits = bloom_bits(universe, num_bits=bloom_bits_count)
         else:
-            bloom_df = bloom_filter_df(
-                universe,
-                num_bits=bloom_bits_count).localCheckpoint(eager=True)
+            bloom_df, _ = materialize(bloom_filter_df(
+                universe, num_bits=bloom_bits_count))
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if bloom_bits_count is not None:
@@ -481,7 +477,7 @@ def robots_gate_stream(spark: SparkSession, src_dir: str,
     other gate table."""
     from picoprobedataflow_spark.functions.web import robots_gate
 
-    rules_ckpt = rules.localCheckpoint(eager=True)
+    rules_ckpt, _ = materialize(rules)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         (robots_gate(batch_df, rules_ckpt, url_col=url_col)
@@ -509,8 +505,8 @@ def psi_drift_stream(spark: SparkSession, src_dir: str,
 
     The reference half — quantile edges and full-grid bucket counts,
     both k-bounded — is built and localCheckpointed ONCE outside the
-    loop (:func:`..operators.drift.psi_reference` with
-    ``materialize=True``); per-batch cost is one map-side bucket
+    loop (:func:`..operators.drift.psi_reference`); per-batch cost
+    is one map-side bucket
     count over the batch plus n_buckets-row arithmetic. Verdicts are
     per-batch with no cross-batch state, so a replayed batch appends
     byte-identical rows (dedupe on ``batch_id`` at read, the gate
@@ -518,8 +514,7 @@ def psi_drift_stream(spark: SparkSession, src_dir: str,
     from picoprobedataflow_spark.operators.drift import (
         psi_reference, psi_score)
 
-    reference = psi_reference(ref, value_col, n_buckets,
-                              materialize=True)
+    reference = psi_reference(ref, value_col, n_buckets)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         (psi_score(batch_df, value_col, reference)
@@ -547,8 +542,8 @@ def ks_drift_stream(spark: SparkSession, src_dir: str,
 
     The reference per-distinct-value counts are built and
     localCheckpointed ONCE outside the loop
-    (:func:`..operators.drift.ks_reference` with
-    ``materialize=True``); per-batch cost is one map-side value
+    (:func:`..operators.drift.ks_reference`); per-batch cost is
+    one map-side value
     count over the batch plus the sharded two-phase ECDF stitch
     (round 17 — parallel shard windows; the old single-partition
     ordered pass is retired). One row per batch, no cross-batch
@@ -557,8 +552,7 @@ def ks_drift_stream(spark: SparkSession, src_dir: str,
     from picoprobedataflow_spark.operators.drift import (
         ks_reference, ks_score)
 
-    reference = ks_reference(ref, value_col, round_to,
-                             materialize=True)
+    reference = ks_reference(ref, value_col, round_to)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         (ks_score(batch_df, value_col, reference)
@@ -633,7 +627,7 @@ def nb_score_stream(spark: SparkSession, src_dir: str,
     from picoprobedataflow_spark.operators.mlfit import (
         NBModel, nb_predict)
 
-    frozen = NBModel(model.llr.localCheckpoint(eager=True),
+    frozen = NBModel(materialize(model.llr)[0],
                      model.prior_logodds, model.oov_llr, model.alpha)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -668,8 +662,8 @@ def chi2_drift_stream(spark: SparkSession, src_dir: str,
 
     The reference category counts — cardinality-bounded, optionally
     ``top_k``-rolled — are built and localCheckpointed ONCE outside
-    the loop (:func:`..operators.drift.chi2_reference` with
-    ``materialize=True``); per-batch cost is one map-side category
+    the loop (:func:`..operators.drift.chi2_reference`); per-batch
+    cost is one map-side category
     count plus a category-bounded join. Per-batch verdicts, no
     cross-batch state: replayed batches append byte-identical rows
     (dedupe on ``batch_id`` at read, the gate tables' shared
@@ -677,8 +671,7 @@ def chi2_drift_stream(spark: SparkSession, src_dir: str,
     from picoprobedataflow_spark.operators.drift import (
         chi2_reference, chi2_score)
 
-    reference = chi2_reference(ref, cat_col, top_k,
-                               materialize=True)
+    reference = chi2_reference(ref, cat_col, top_k)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         (chi2_score(batch_df, cat_col, reference)

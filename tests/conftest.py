@@ -7,6 +7,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -36,6 +37,29 @@ def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
                 f"read_parquet('{sf_dir}/{t}.parquet')")
     return con
+
+
+@contextmanager
+def job_group(spark, name):
+    """Count the block's Spark jobs; yields a callable returning how
+    many it has run so far (read from ``statusTracker``). The jobs run
+    under job group ``name``, or under the caller's group when one is
+    set, so an outer per-test grouping (``scripts/job_counts.py``)
+    still counts them. Job counts do not swing with the machine the
+    way wall time does, so they pin a call's fixed cost."""
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+    group = outer or name
+    if outer is None:
+        sc.setJobGroup(name, name)
+    tracker = sc.statusTracker()
+    before = len(tracker.getJobIdsForGroup(group))
+    try:
+        yield lambda: len(tracker.getJobIdsForGroup(group)) - before
+    finally:
+        if outer is None:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
 
 
 @pytest.fixture(scope="session")

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import pickle
 import sqlite3
-from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -30,11 +29,17 @@ from picoprobedataflow_spark.io.records import (
 )
 from picoprobedataflow_spark.operators import scientific as SC
 
+from .conftest import job_group
+
 #: Spark jobs per flow call on the three-file drop (full, incremental,
 #: spatiotemporal; local[4]). Reducing in the long form over a fresh
 #: directory scan took 10, 13 and 8; evaluating the incremental
 #: manifest twice (broadcast keys and anti join) took 8 incremental
 FULL_JOBS, INCREMENTAL_JOBS, SPATIOTEMPORAL_JOBS = 5, 7, 5
+#: Spark jobs per ``curate_documents`` call on the end-to-end test
+#: corpus (47 or 48 from run to run). A count job after each stage
+#: checkpoint and a persisted MinHash vector table took 72.
+CURATION_JOBS = 48
 
 
 def _write_emd_files(directory, indices, seed=0):
@@ -191,29 +196,18 @@ def test_flow_outputs_equal_longform_reference(spark, emd_drop):
         files, exp_type="spatiotemporal_imaging").collect()
 
 
-@contextmanager
-def _job_group(spark, name):
-    sc = spark.sparkContext
-    sc.setJobGroup(name, name)
-    try:
-        yield lambda: len(sc.statusTracker().getJobIdsForGroup(name))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-
-
 def test_flow_job_counts(spark, emd_drop):
     """Spark jobs per flow call stay at most what one parse and one
     hash per file cost: a checkpoint per step, plus the publish
     aggregate's stages and the incremental anti join's broadcast."""
-    with _job_group(spark, "flow-jobs-full") as jobs:
+    with job_group(spark, "flow-jobs-full") as jobs:
         first = hyperspectral_flow(spark, str(emd_drop))
     assert jobs() <= FULL_JOBS
     _write_emd_files(emd_drop, range(3, 5), seed=1)
-    with _job_group(spark, "flow-jobs-incremental") as jobs:
+    with job_group(spark, "flow-jobs-incremental") as jobs:
         hyperspectral_flow(spark, str(emd_drop), processed=first.manifest)
     assert jobs() <= INCREMENTAL_JOBS
-    with _job_group(spark, "flow-jobs-spatiotemporal") as jobs:
+    with job_group(spark, "flow-jobs-spatiotemporal") as jobs:
         spatiotemporal_flow(spark, str(emd_drop))
     assert jobs() <= SPATIOTEMPORAL_JOBS
 
@@ -335,15 +329,9 @@ def test_read_pickled_runs(spark, tmp_path):
     assert sorted(r.run_id for r in df.collect()) == ["a", "b"]
 
 
-def test_curation_flow_end_to_end(spark):
-    """The composed curation funnel: each stage drops exactly the
-    planted offender — junk (quality), spam (repetition), exact
-    dups (keep-min-id), a near dup (keep-min-id over the closure),
-    a benchmark copy (decontam) — funnel counts are monotone and
-    the kept set is exactly the clean docs."""
-    from picoprobedataflow_spark.flows.curation import \
-        curate_documents
-
+def _curation_corpus(spark):
+    """(docs, bench): four clean docs plus one planted offender per
+    funnel stage, and a benchmark holding a copy of clean doc 3."""
     # generated prose: unique content words + each stopword exactly
     # twice, so quality passes (stopword mass, length) while every
     # repetition metric stays under its threshold (top word 2/28,
@@ -360,8 +348,25 @@ def test_curation_flow_end_to_end(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     bench = spark.createDataFrame([(100, good[3])],
                                   "doc_id long, text string")
-    res = curate_documents(docs, min_quality=0.2, bench_docs=bench,
-                           contamination_threshold=0.2)
+    return docs, bench
+
+
+def test_curation_flow_end_to_end(spark):
+    """The composed curation funnel: each stage drops exactly the
+    planted offender — junk (quality), spam (repetition), exact
+    dups (keep-min-id), a near dup (keep-min-id over the closure),
+    a benchmark copy (decontam) — funnel counts are monotone and
+    the kept set is exactly the clean docs. The call runs in at most
+    CURATION_JOBS Spark jobs: the stage counts ride on the stage
+    checkpoints' own jobs."""
+    from picoprobedataflow_spark.flows.curation import \
+        curate_documents
+
+    docs, bench = _curation_corpus(spark)
+    with job_group(spark, "curation-jobs") as jobs:
+        res = curate_documents(docs, min_quality=0.2, bench_docs=bench,
+                               contamination_threshold=0.2)
+    assert jobs() <= CURATION_JOBS
     kept = sorted(r.doc_id for r in res.kept.collect())
     assert kept == [0, 1, 2]
     stages = [s for s, _ in res.funnel]
@@ -380,6 +385,30 @@ def test_curation_flow_end_to_end(spark):
     with _pytest.raises(ValueError):
         curate_documents(docs, bench_docs=bench,
                          contamination_threshold=0.0)
+
+
+def test_curation_and_semantic_dedup_leave_no_cached_plan(spark):
+    """Neither the curation flow (its MinHash vector table) nor
+    semantic dedup (its cell assignment) leaves a cached plan in the
+    session's cache manager, where it would outlive the call and be
+    served to a later plan that matches it."""
+    from picoprobedataflow_spark.flows.curation import \
+        curate_documents
+    from picoprobedataflow_spark.operators.similarity import \
+        semantic_dedup
+
+    docs, bench = _curation_corpus(spark)
+    emb = spark.createDataFrame(
+        [(i, [1.0, float(i % 3)]) for i in range(8)],
+        "vec_id long, embedding array<double>")
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for _ in range(2):
+        kept = curate_documents(docs, min_quality=0.2,
+                                bench_docs=bench).kept
+        assert sorted(r.doc_id for r in kept.collect()) == [0, 1, 2]
+        assert len(semantic_dedup(emb, n_clusters=2).collect()) == 8
+        assert cache.isEmpty()
 
 
 def test_curation_flow_quota_and_budget_stages(spark):

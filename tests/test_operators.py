@@ -18,6 +18,13 @@ from picoprobedataflow_spark.operators import dedup as DD
 from picoprobedataflow_spark.operators import similarity as SIM
 
 from .assign_reference import cell_pairs, nearest_cell_reference
+from .conftest import job_group
+
+#: Spark jobs per call of the iterative operators on their pinned test
+#: graphs (local[4]): each round's fixpoint sum or row count rides on
+#: its checkpoint job. With a count or aggregate job after each
+#: checkpoint they took 24, 109, 56 and 70.
+CC_JOBS, STAR_JOBS, PAGERANK_JOBS, PAGERANK_SEEDED_JOBS = 18, 73, 54, 66
 
 
 def _docs(spark, texts):
@@ -714,8 +721,10 @@ def test_connected_components_matches_union_find(spark):
              (20, 21),                        # pair -> comp 20
              (7, 7)]                          # self-loop, harmless
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {r.node: r.comp
-           for r in DD.connected_components(df).collect()}
+    with job_group(spark, "cc-jobs") as jobs:
+        labels = DD.connected_components(df)
+    assert jobs() <= CC_JOBS
+    got = {r.node: r.comp for r in labels.collect()}
     nodes = sorted({n for e in edges for n in e})
     want = _union_find_components(edges, nodes)
     assert got == want
@@ -925,8 +934,10 @@ def test_star_components_equal_label_propagation(spark):
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     lp = {r.node: r.comp for r in DD.connected_components(
         df, max_iter=40).collect()}
-    star = {r.node: r.comp for r in DD.connected_components_star(
-        df).collect()}
+    with job_group(spark, "star-jobs") as jobs:
+        labels = DD.connected_components_star(df)
+    assert jobs() <= STAR_JOBS
+    star = {r.node: r.comp for r in labels.collect()}
     # 200 has only a self-loop: label propagation drops self-loops the
     # same way; both must map it to itself
     assert star == lp
@@ -3195,8 +3206,10 @@ def test_pagerank_matches_numpy_power_iteration(spark):
         for a, b in uniq:
             new[b] += d * pr[a] / out[a]
         pr = new
-    got = {r.node: r for r in
-           pagerank(edges, n_iter=it, damping=d).collect()}
+    with job_group(spark, "pagerank-jobs") as jobs:
+        ranks = pagerank(edges, n_iter=it, damping=d)
+    assert jobs() <= PAGERANK_JOBS
+    got = {r.node: r for r in ranks.collect()}
     assert set(got) == set(range(n))
     for v in range(n):
         assert got[v].outdeg == out[v]
@@ -3481,9 +3494,10 @@ def test_pagerank_personalized_trustrank(spark):
     edges = spark.createDataFrame(E, "src long, dst long")
     seeds = spark.createDataFrame([(0,), (99,)], "node long")  # 99 absent
     d, it, n = 0.85, 6, 5
-    got = {r.node: r.pr for r in
-           pagerank(edges, n_iter=it, damping=d,
-                    seeds=seeds).collect()}
+    with job_group(spark, "pagerank-seeded-jobs") as jobs:
+        ranks = pagerank(edges, n_iter=it, damping=d, seeds=seeds)
+    assert jobs() <= PAGERANK_SEEDED_JOBS
+    got = {r.node: r.pr for r in ranks.collect()}
     # numpy model: teleport vector concentrated on node 0
     out = {0: 1, 1: 1, 2: 0, 3: 1, 4: 0}
     t = np.array([1.0, 0, 0, 0, 0])
